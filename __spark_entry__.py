@@ -823,7 +823,8 @@ def q_spec_scene_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     images.py:96-124 default rendering): regridded scenes → inverted
     min-max grayscale uint8 per scene. This key certifies the uint8 path
     (scene_id, ix, iy, byte) — the PNG half is the same JVM hex-pack +
-    Arrow encode as tile_images, property-tested byte-exact."""
+    Arrow encode as tile_images; tests decode its PNGs with stdlib zlib
+    and compare every pixel with this byte path."""
     from convml_data_spark import pipeline
 
     _prep(spark)

@@ -189,6 +189,12 @@ def jaccard_dedup_prefix(
 
     Returns (id_a, id_b, jaccard) — identical semantics to a full O(n²)
     scan, so this IS oracle-checkable.
+
+    Caveat: shingles are compared as 60-bit md5 hashes
+    (:func:`_hashed_shingle_sets`), so two distinct shingles collide with
+    probability ≈ n²/2⁶¹ over n distinct shingles, and a collision can
+    inflate a pair's intersection. The DuckDB oracle hashes in lockstep,
+    so it cannot detect one.
     """
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
@@ -309,12 +315,6 @@ def _affine_mersenne_long(x, ai: int, bi: int):
     low = F.lit(a0) * x0
     t3 = F.shiftright(low, 61) + low.bitwiseAND(p)
     return F.pmod(F.pmod(t1 + t3, p) + F.pmod(t2 + F.lit(bi), p), p)
-
-
-def _affine_closure(ai: int, bi: int):
-    """One-argument lambda for HOF use (``F.transform`` infers arity from
-    the callable's signature, so the constants must be closed over)."""
-    return lambda x: _affine_mersenne_long(x, ai, bi)
 
 
 def _affine_mersenne_sql(x: str, ai: int, bi: int) -> str:
@@ -775,6 +775,10 @@ def connected_components(
     :func:`~.persist.materialize_for_reuse`; observation metrics fire on
     both checkpoint kinds). Only nodes that appear in ``pairs`` are
     labelled (self-pairs label themselves).
+
+    At most ``max_iters`` star rounds run. If the budget runs out before
+    the exact fixed-point check passes, a ``RuntimeError`` names the
+    rounds run; no labels are emitted from an unconverged edge set.
     """
     from pyspark.sql import Observation
 
@@ -849,44 +853,51 @@ def connected_components(
     # exact isEmpty() probe, so a retry-distorted observation can cost
     # one tiny job, never a wrong answer.
     converged = not sig[0] and e.isEmpty()
-    if not converged:
-        for _ in range((max_iters + 1) // 2):
-            obs_out = Observation()
-            # two alternating star rounds per materialized step — ONE
-            # eager-checkpoint action per round PAIR instead of one per
-            # round. The inner round goes through a LAZY checkpoint: a
-            # star round references its input ~4 times (two adj
-            # projections, each feeding the min-agg and the re-attach
-            # join), and Catalyst plans a full subtree per reference, so
-            # naive composition re-executes the inner round ~4x inside
-            # the outer plan (measured 2x slower end-to-end). The lazy
-            # block fills exactly once INSIDE the outer step's eager
-            # action, keeping: one action per two rounds, every round's
-            # shuffles executed once, lineage truncated at both levels.
-            # (An inner observe() is impossible here — metrics never
-            # fire on lazily-checkpointed plans — so the trigger is
-            # cross-step: the quadruple two rounds apart. Detection lags
-            # one step behind the r17 per-round trigger at worst, and
-            # the extra rounds run over the already-contracted star set.)
-            inner = materialize_for_reuse(
-                _small_star(_large_star(e)), durable=durable
-            )
-            e = materialize_for_reuse(
-                _small_star(_large_star(inner)).observe(
-                    obs_out, *_sig_exprs()
-                ),
-                durable=durable,
-                eager=True,
-            )
-            new_sig = _sig_of(obs_out)
-            # accumulator match is only the trigger — accept only on an
-            # EXACT-job verification of the fixed-point property, so a
-            # retry-distorted observation can never end the loop early
-            # (and a trigger that is NOT a fixed point — the hypothetical
-            # 2-cycle — can never be accepted)
-            if new_sig == sig and _exact_fixed_point(e):
-                break
-            sig = new_sig
+    rounds = 0
+    while not converged and rounds < max_iters:
+        obs_out = Observation()
+        # two alternating star rounds per materialized step — ONE
+        # eager-checkpoint action per round PAIR instead of one per
+        # round. The inner round goes through a LAZY checkpoint: a
+        # star round references its input ~4 times (two adj
+        # projections, each feeding the min-agg and the re-attach
+        # join), and Catalyst plans a full subtree per reference, so
+        # naive composition re-executes the inner round ~4x inside
+        # the outer plan (measured 2x slower end-to-end). The lazy
+        # block fills exactly once INSIDE the outer step's eager
+        # action, keeping: one action per two rounds, every round's
+        # shuffles executed once, lineage truncated at both levels.
+        # (An inner observe() is impossible here — metrics never
+        # fire on lazily-checkpointed plans — so the trigger is
+        # cross-step: the quadruple two rounds apart. Detection lags
+        # one step behind the r17 per-round trigger at worst, and
+        # the extra rounds run over the already-contracted star set.)
+        # An odd budget's last step runs its single remaining round.
+        fused = max_iters - rounds >= 2
+        step = _small_star(_large_star(e))
+        if fused:
+            inner = materialize_for_reuse(step, durable=durable)
+            step = _small_star(_large_star(inner))
+        rounds += 2 if fused else 1
+        e = materialize_for_reuse(
+            step.observe(obs_out, *_sig_exprs()), durable=durable, eager=True
+        )
+        new_sig = _sig_of(obs_out)
+        # accumulator match is only the trigger — accept only on an
+        # EXACT-job verification of the fixed-point property, so a
+        # retry-distorted observation can never end the loop early
+        # (and a trigger that is NOT a fixed point — the hypothetical
+        # 2-cycle — can never be accepted)
+        converged = new_sig == sig and _exact_fixed_point(e)
+        sig = new_sig
+    # budget exit: the trigger may simply not have fired yet, so check the
+    # fixed point once; labels read off an unconverged edge set would
+    # silently split components
+    if not converged and not _exact_fixed_point(e):
+        raise RuntimeError(
+            f"connected_components did not converge in {rounds} star rounds "
+            f"(max_iters={max_iters})"
+        )
     # at the fixed point every component is a star centered at its minimum:
     # component(x) = min(neighbors ∪ {x}); unpaired/self-pair nodes keep
     # their own id via the left join
@@ -1381,7 +1392,9 @@ def containment_pairs(
     ``(id_a, id_b, containment)`` with id_a ≠ id_b, containment =
     round(|A∩B|/|A|, 6) ≥ t (A = id_a's shingles; the relation is
     DIRECTED — a contained quote lists (quote, host) but not the
-    reverse unless the host is also mostly covered).
+    reverse unless the host is also mostly covered). Shingles are 60-bit
+    md5 hashes, with the collision caveat of :func:`jaccard_dedup_prefix`
+    (≈ n²/2⁶¹; the lockstep-hashing oracle cannot detect it).
 
     Scale: shuffle ∝ Σ prefix-token inverted-list lengths (the PPJoin
     economics), one exact verify join; shingle relation persisted once

@@ -6,22 +6,27 @@ Data model: media are opaque BINARY columns with a typed meta STRUCT
 row. Decode / feature-extract run as ``mapInPandas`` over Arrow batches so
 bytes never round-trip through Python row objects.
 
-The real decoders (PIL/OpenCV/ffmpeg) are not in this container, so
-``decode_payload`` dispatches: known fake format → deterministic synthetic
-pixels (md5-derived, reproducible everywhere); real formats →
-``NotImplementedError`` with the library name. The Spark-side plumbing —
-schema, batch shape, broadcast-free streaming decode, partition parallelism
-— is the production path either way.
+Decoding dispatches on the meta format: the known fake format →
+deterministic synthetic pixels (md5-derived, reproducible everywhere);
+real formats → ``NotImplementedError`` naming the codec library they need
+(PIL/OpenCV/ffmpeg are not dependencies of the engine). Encoding needs no
+codec library: :func:`encode_png` writes real grayscale PNGs with stdlib
+``zlib``/``struct``. The Spark-side plumbing — schema, batch shape,
+broadcast-free streaming decode, partition parallelism — is the
+production path either way.
 """
 
 from __future__ import annotations
 
 import hashlib
+import struct
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StructField, StructType
 
 FAKE_FORMAT = "fake-gray8"
 
@@ -135,52 +140,52 @@ def image_features(
     return df.select(id_col, payload_col, meta_col).mapInPandas(extract, schema)
 
 
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    body = tag + data
+    return struct.pack(">I", len(data)) + body + struct.pack(">I", zlib.crc32(body))
+
+
+def _gray8_png(pixels: np.ndarray) -> bytes:
+    """One 8-bit grayscale PNG from an (h, w) uint8 array: signature, IHDR,
+    a single IDAT holding the zlib stream of the filter-0 scanlines (one
+    zero byte before each row), IEND."""
+    h, w = pixels.shape
+    scanlines = np.hstack([np.zeros((h, 1), np.uint8), pixels])
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + _png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0))
+        + _png_chunk(b"IDAT", zlib.compress(scanlines.tobytes()))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
 def encode_png(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload", meta_col: str = "media_meta"
+    df: DataFrame, payload_col: str = "payload", meta_col: str = "media_meta"
 ) -> DataFrame:
     """G8 sink half (tiles.py:340-371, sources/images.py:12-141): encode
-    decoded pixels to PNG bytes per row, Arrow-batched.
+    each row's decoded pixels to an 8-bit grayscale PNG (:func:`_gray8_png`,
+    stdlib ``zlib``/``struct`` only), Arrow-batched.
 
-    PIL isn't in this container: with it installed the branch below does the
-    real ``Image.fromarray(...).save(buf, 'PNG')``; without it we emit a
-    deterministic container (magic + dims + raw pixels) so the column
-    schema, batching and downstream contracts stay exercised.
+    Every column other than ``payload_col`` and ``meta_col`` passes through
+    unchanged, so callers keep their keys on the same row and need no join
+    back. Returns (pass-through columns..., png binary).
     """
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, png binary"
+    keep = [f for f in df.schema.fields if f.name not in (payload_col, meta_col)]
+    schema = StructType([*keep, StructField("png", BinaryType())])
+    cols = [f.name for f in keep]
 
     def encode(batches):
-        import io
-
         import pandas as pd
-
-        try:
-            from PIL import Image  # pragma: no cover - not in container
-        except Exception:
-            Image = None
 
         for pdf in batches:
             frames = []
             for pos, w, h, _fmt, _x, px in _decode_groups(pdf, payload_col, meta_col):
-                if Image is not None:
-                    datas = []
-                    for row in px.reshape(len(pos), h, w):
-                        buf = io.BytesIO()
-                        Image.fromarray(row, mode="L").save(buf, format="PNG")
-                        datas.append(buf.getvalue())
-                else:
-                    hdr = b"STUBPNG" + w.to_bytes(4, "big") + h.to_bytes(4, "big")
-                    # bytes-per-row slice of the stacked matrix; the codec
-                    # call is the only irreducibly per-image step
-                    raw = px.tobytes()
-                    n = w * h
-                    datas = [hdr + raw[i * n : (i + 1) * n] for i in range(len(pos))]
-                frames.append(
-                    pd.DataFrame({id_col: pdf[id_col].iloc[pos].to_numpy(), "png": datas})
-                )
-            yield pd.concat(frames) if frames else pd.DataFrame(columns=[id_col, "png"])
+                out = pdf[cols].iloc[pos].reset_index(drop=True)
+                out["png"] = [_gray8_png(img) for img in px.reshape(len(pos), h, w)]
+                frames.append(out)
+            yield pd.concat(frames) if frames else pd.DataFrame(columns=[*cols, "png"])
 
-    return df.select(id_col, payload_col, meta_col).mapInPandas(encode, schema)
+    return df.mapInPandas(encode, schema)
 
 
 def expected_fake_pixels(doc_id: int, width: int = 16, height: int = 16) -> np.ndarray:

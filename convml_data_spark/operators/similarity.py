@@ -776,37 +776,6 @@ def pq_encode(
     )
 
 
-def pq_topk(
-    codes_df: DataFrame,
-    codebooks: list[list[list[float]]],
-    query_vector: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k by asymmetric PQ distance: the query precomputes
-    one m×k lookup table of block distances (plan-time literals), and each
-    row's score is m ``element_at`` lookups summed — the memory-bound PQ
-    scan that never touches the original vectors. Returns (id, approx_d2)
-    ascending (smaller = nearer), deterministic tie-break on id."""
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    total = None
-    for j, book in enumerate(codebooks):
-        qb = query_vector[j * d : (j + 1) * d]
-        lut = [
-            sum((float(a) - float(b)) ** 2 for a, b in zip(qb, c)) for c in book
-        ]
-        term = F.element_at(
-            F.array(*[F.lit(float(x)) for x in lut]),
-            F.col("codes")[j] + 1,
-        )
-        total = term if total is None else total + term
-    scored = codes_df.select(
-        F.col(id_col), F.round(total, 6).alias("approx_d2")
-    )
-    return scored.orderBy(F.col("approx_d2").asc(), F.col(id_col)).limit(k)
-
-
 def l2_topk_batch(
     embeddings: DataFrame,
     queries: list[tuple[int, list[float]]],

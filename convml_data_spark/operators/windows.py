@@ -1,4 +1,4 @@
-"""Window/ordered analytics — SURVEY §2.5 W1–W3, §2.4 A10/A11.
+"""Window/ordered analytics — SURVEY §2.5 W1–W3, §2.4 A10.
 
 Reference semantics:
 - W1 consecutive diff: ``np.diff`` over sorted times
@@ -107,16 +107,6 @@ def sequential_scan(
         return pd.DataFrame(out, columns=out_cols)
 
     return df.groupBy(*partition_by).applyInPandas(run, schema)
-
-
-def minmax_normalize(df: DataFrame, value_col: str, partition_by: list[str]) -> DataFrame:
-    """A11: scale ``value_col`` to [0, 1] per partition (image normalization,
-    sources/images.py:34-43) via partition-wide min/max window aggregates."""
-    w = Window.partitionBy(*partition_by)
-    lo, hi = F.min(value_col).over(w), F.max(value_col).over(w)
-    return df.withColumn(
-        "normalized", F.when(hi != lo, (F.col(value_col) - lo) / (hi - lo)).otherwise(F.lit(0.0))
-    )
 
 
 def sessionize(

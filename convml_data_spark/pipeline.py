@@ -625,8 +625,7 @@ def build_scene_images(
     sources/images.py:96-141): regridded scene raster → per-pixel uint8
     via the spec's image function → row-major grayscale payload packed
     ENTIRELY JVM-side (hex-pack/unhex, same path as ``tile_images``) →
-    PNG bytes Arrow-batched (real PIL when present, the deterministic
-    stub container otherwise).
+    grayscale PNG bytes Arrow-batched.
 
     Dispatch (scene_images.py:6-17):
 
@@ -650,8 +649,8 @@ def build_scene_images(
     completed as byte 0, the same black the NaN policy uses, and a scene
     whose regrid covers zero cells emits a whole-black image rather than
     silently vanishing — so the payload length always matches the
-    declared PNG dims (a short payload crashes real PIL and mis-slices
-    the stub). Byte-exactness is property-tested.
+    declared PNG dims (the encoder rejects a short payload).
+    Tests decode every PNG and compare its pixels with the byte path.
     """
     if spec.image_function is None:
         raise ValueError(
@@ -897,10 +896,10 @@ def _pack_gray8(
     per-key pixel rows → row-major uint8 payload packed ENTIRELY
     JVM-side (array_sort over (q, p, byte) structs — deterministic
     regardless of upstream order — hex-pack + unhex to binary), then
-    :func:`~.operators.multimodal.encode_png` emits PNG bytes
-    Arrow-batched (real PIL when present, the deterministic stub
-    container otherwise). Callers must supply exactly width·height rows
-    per key with ``byte_col`` already in [0, 255].
+    :func:`~.operators.multimodal.encode_png` turns each payload into a
+    grayscale PNG Arrow-batched, the key columns riding through on the
+    same row. Callers must supply exactly width·height rows per key with
+    ``byte_col`` already in [0, 255].
 
     Returns (key columns..., png binary).
     """
@@ -916,9 +915,6 @@ def _pack_gray8(
         byte_px.groupBy(*key_cols)
         .agg(F.unhex(hexstr).alias("payload"))
         .withColumn(
-            "_uid", F.concat_ws("|", *[F.col(c).cast("string") for c in key_cols])
-        )
-        .withColumn(
             "media_meta",
             F.struct(
                 F.lit(int(width)).alias("width"),
@@ -927,8 +923,7 @@ def _pack_gray8(
             ),
         )
     )
-    pngs = multimodal.encode_png(keyed, id_col="_uid")
-    return keyed.select(*key_cols, "_uid").join(pngs, "_uid").drop("_uid")
+    return multimodal.encode_png(keyed)
 
 
 def tile_images(
@@ -944,11 +939,11 @@ def tile_images(
     pixel rows → a row-major uint8 grayscale raster payload, packed
     ENTIRELY JVM-side (values scaled to [0, 255] with explicit HALF_UP,
     hex-packed and unhexed to binary — no Python in the packing), then
-    :func:`~.operators.multimodal.encode_png` emits PNG bytes Arrow-batched
-    (real PIL when present, the deterministic stub container otherwise).
+    :func:`~.operators.multimodal.encode_png` emits grayscale PNG bytes
+    Arrow-batched.
 
     Returns (key columns..., png binary). Binary columns stay off the
-    driver-compare surface; byte-exactness is property-tested.
+    driver-compare surface; tests decode the PNGs and check every pixel.
     """
     scale = 255.0 / float(value_max)
     # clamp to [0, 255] BEFORE hex-packing: lpad TRUNCATES a >2-char hex

@@ -4,6 +4,8 @@ scan, X2 dotted-name UDAF, G8 encode."""
 from __future__ import annotations
 
 import os
+import struct
+import zlib
 
 from pyspark.sql import functions as F
 
@@ -153,20 +155,37 @@ def test_grouped_reduce_by_dotted_name(spark):
     assert got == {"x": 2.0, "y": 10.0}
 
 
-def test_encode_png_stub_roundtrip(spark):
-    docs = spark.range(3).select(F.col("id").alias("doc_id"))
-    enc = multimodal.encode_png(multimodal.attach_fake_payload(docs, width=8, height=8))
-    rows = {r["doc_id"]: bytes(r["png"]) for r in enc.collect()}
-    for i in range(3):
-        data = rows[i]
-        if data[:7] == b"STUBPNG":
-            w = int.from_bytes(data[7:11], "big")
-            h = int.from_bytes(data[11:15], "big")
-            assert (w, h) == (8, 8)
-            px = multimodal.expected_fake_pixels(i, 8, 8).astype("uint8").tobytes()
-            assert data[15:] == px
-        else:
-            assert data[:8] == b"\x89PNG\r\n\x1a\n"  # real PIL path
+def decode_gray8_png(data: bytes) -> tuple[int, int, bytes]:
+    """Stdlib decoder for the engine's PNGs: checks the signature, the IHDR
+    fields (8-bit grayscale), every chunk CRC and every scanline's filter
+    byte; returns ``(width, height, row-major pixels)``."""
+    assert data[:8] == b"\x89PNG\r\n\x1a\n"
+    chunks, off = {}, 8
+    while off < len(data):
+        n, tag = struct.unpack(">I4s", data[off : off + 8])
+        body, end = data[off + 8 : off + 8 + n], off + 12 + n
+        assert struct.unpack(">I", data[end - 4 : end])[0] == zlib.crc32(tag + body), tag
+        chunks.setdefault(tag, []).append(body)
+        off = end
+    assert list(chunks) == [b"IHDR", b"IDAT", b"IEND"] and chunks[b"IEND"] == [b""]
+    w, h, *fields = struct.unpack(">IIBBBBB", chunks[b"IHDR"][0])
+    assert fields == [8, 0, 0, 0, 0]
+    raw = zlib.decompress(b"".join(chunks[b"IDAT"]))
+    assert len(raw) == h * (w + 1) and raw[:: w + 1] == bytes(h)  # filter 0
+    return w, h, b"".join(raw[y * (w + 1) + 1 : (y + 1) * (w + 1)] for y in range(h))
+
+
+def test_encode_png_roundtrip(spark):
+    docs = spark.range(3).select(F.col("id").alias("doc_id"), F.lit("x").alias("tag"))
+    enc = multimodal.encode_png(multimodal.attach_fake_payload(docs, width=8, height=6))
+    # every column but payload/meta passes through beside the png
+    assert enc.columns == ["doc_id", "tag", "png"]
+    rows = {r["doc_id"]: r for r in enc.collect()}
+    assert sorted(rows) == [0, 1, 2]
+    for i, r in rows.items():
+        assert r["tag"] == "x"
+        px = multimodal.expected_fake_pixels(i, 8, 6).astype("uint8").tobytes()
+        assert decode_gray8_png(bytes(r["png"])) == (8, 6, px)
 
 
 # ------------------------------------------------------- spec compositions
@@ -363,10 +382,10 @@ def test_attach_aux_product_sentinel_name(spark):
     assert all(r["scene_scene_id"].startswith("sxx__") for r in rows)
 
 
-def test_tile_images_byte_exact_stub(spark):
+def test_tile_images_byte_exact(spark):
     """tile_images packs the ordered tile raster JVM-side and encodes PNG:
-    on the stub path the container bytes are exactly
-    STUBPNG + dims + floor(v*2.55 + 0.5) uint8 pixels in (q, p) order."""
+    each PNG decodes to exactly floor(v*2.55 + 0.5) uint8 pixels in
+    (q, p) order."""
     import math
 
     spec = pipeline.DatasetSpec.from_dict(TILE_SPEC)
@@ -379,19 +398,12 @@ def test_tile_images_byte_exact_stub(spark):
     imgs = d["tile_images"].collect()
     assert len(imgs) == 12
     for r in imgs:
-        data = bytes(r["png"])
-        if data[:7] != b"STUBPNG":
-            assert data[:8] == b"\x89PNG\r\n\x1a\n"  # real PIL path
-            continue
-        w = int.from_bytes(data[7:11], "big")
-        h = int.from_bytes(data[11:15], "big")
-        assert (w, h) == (4, 4)
         expected = bytes(
             int(math.floor(px[(r["triplet_id"], r["tile_type"], q, p)] * 2.55 + 0.5))
             for q in range(4)
             for p in range(4)
         )
-        assert data[15:] == expected
+        assert decode_gray8_png(bytes(r["png"])) == (4, 4, expected)
 
 
 def test_tile_regrid_nearest_matches_argmin(spark):
@@ -628,11 +640,8 @@ def test_tile_images_clamps_out_of_range_values(spark):
         "k int, p int, q int, value double",
     )
     out = pipeline.tile_images(px, tile_N=2, key_cols=["k"], value_max=100.0).collect()
-    data = bytes(out[0]["png"])
-    if data[:7] == b"STUBPNG":
-        body = data[15:]
-        # row-major (q, p): (-50 -> 0), (150*2.55 -> clamped 255), (255), (0)
-        assert body == bytes([0, 255, 255, 0])
+    # row-major (q, p): (-50 -> 0), (150*2.55 -> clamped 255), (255), (0)
+    assert decode_gray8_png(bytes(out[0]["png"])) == (2, 2, bytes([0, 255, 255, 0]))
 
 
 def test_tile_images_maps_nan_pixels_to_black(spark):
@@ -645,12 +654,9 @@ def test_tile_images_maps_nan_pixels_to_black(spark):
         "k int, p int, q int, value double",
     )
     out = pipeline.tile_images(px, tile_N=2, key_cols=["k"], value_max=100.0).collect()
-    data = bytes(out[0]["png"])
-    if data[:7] == b"STUBPNG":
-        body = data[15:]
-        # row-major (q, p): NaN -> 0 (NOT 255), 100 -> 255,
-        # 50 -> 127 (50 * 2.55 is 127.4999... in binary), 0 -> 0
-        assert body == bytes([0, 255, 127, 0])
+    # row-major (q, p): NaN -> 0 (NOT 255), 100 -> 255,
+    # 50 -> 127 (50 * 2.55 is 127.4999... in binary), 0 -> 0
+    assert decode_gray8_png(bytes(out[0]["png"])) == (2, 2, bytes([0, 255, 127, 0]))
 
 
 def test_dataset_spec_to_dict_idempotent():
@@ -671,20 +677,17 @@ _IMG_SPEC = {
 }
 
 
-def test_scene_images_stub_png_matches_byte_raster(spark):
+def test_scene_images_png_matches_byte_raster(spark):
     """The PNG half packs exactly the certified uint8 raster in row-major
-    (iy, ix) order — byte-exact against the deterministic stub container
-    (real PIL exercises the same payload when present)."""
+    (iy, ix) order — every PNG decodes to the byte path's pixels."""
     spec = pipeline.DatasetSpec.from_dict(_IMG_SPEC)
     d = pipeline.build_scene_images(spark, spec, src_dx=10.0, src_nx=4)
     byts = {(r["scene_id"], r["ix"], r["iy"]): r["byte"] for r in d["bytes"].collect()}
     imgs = {r["scene_id"]: bytes(r["png"]) for r in d["images"].collect()}
     assert len(imgs) == 2
     for sid, png in imgs.items():
-        if png[:7] == b"STUBPNG":
-            body = png[15:]
-            expect = bytes(byts[(sid, ix, iy)] for iy in range(4) for ix in range(4))
-            assert body == expect
+        expect = bytes(byts[(sid, ix, iy)] for iy in range(4) for ix in range(4))
+        assert decode_gray8_png(png) == (4, 4, expect)
     # default rendering is INVERTED min-max: the per-scene max maps to 0
     # (dark) and the min to 255 (bright) — reference images.py:104-107
     for sid in imgs:
@@ -694,9 +697,8 @@ def test_scene_images_stub_png_matches_byte_raster(spark):
 
 def test_scene_images_pads_uncovered_cells_to_full_raster(spark):
     """A source raster short of the domain leaves regrid cells EMPTY; the
-    PNG payload must still be exactly nx·ny bytes (a short payload
-    crashes real PIL and mis-slices the stub container across scenes),
-    with uncovered cells rendered black (0)."""
+    PNG must still hold exactly nx·ny pixels, with uncovered cells
+    rendered black (0)."""
     spec = pipeline.DatasetSpec.from_dict(_IMG_SPEC)  # 4x4 cells at res 10
     # 3x3 source at 10.0 spacing covers only cells 0..2 on each axis
     d = pipeline.build_scene_images(spark, spec, src_dx=10.0, src_nx=3)
@@ -705,15 +707,10 @@ def test_scene_images_pads_uncovered_cells_to_full_raster(spark):
         per_scene.setdefault(r["scene_id"], {})[(r["ix"], r["iy"])] = r["byte"]
     assert all(len(v) == 9 for v in per_scene.values())  # covered cells only
     for r in d["images"].collect():
-        data = bytes(r["png"])
-        if data[:7] == b"STUBPNG":
-            body = data[15:]
-            assert len(body) == 16  # full 4x4 despite 9 covered cells
-            covered = per_scene[r["scene_id"]]
-            for iy in range(4):
-                for ix in range(4):
-                    want = covered.get((ix, iy), 0)
-                    assert body[iy * 4 + ix] == want
+        covered = per_scene[r["scene_id"]]
+        # full 4x4 despite 9 covered cells
+        want = bytes(covered.get((ix, iy), 0) for iy in range(4) for ix in range(4))
+        assert decode_gray8_png(bytes(r["png"])) == (4, 4, want)
 
 
 def test_scene_images_user_function_dispatch_and_guards(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -438,6 +439,51 @@ def test_spec_tile_paths_broadcast_bounded_sides(spark):
     p2 = buf.getvalue()
     assert "SortMergeJoin" not in p2
     assert "BroadcastHashJoin" in p2
+
+
+def _simple_plan(df) -> str:
+    # simple explain prints each node once (formatted prints it twice)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain()
+    return buf.getvalue()
+
+
+def _join_nodes(plan: str) -> int:
+    return sum(
+        1 for line in plan.splitlines()
+        if re.search(r"\b(\w+Join|CartesianProduct)\b", line)
+    )
+
+
+def test_image_products_encode_once_without_rejoin(spark):
+    """The image products run ONE Arrow encode and no join back onto
+    their keys: keys pass through encode_png, so tile_images plans
+    exactly tile_pixels' joins (a key re-join would plan the whole
+    regrid + sampling subtree a second time, Catalyst having no common
+    subexpression elimination across the two join sides)."""
+    from convml_data_spark import pipeline
+
+    d = pipeline.build_tile_data(
+        spark, entrymod._tile_spec(),
+        src_dx=entrymod.TILE_SRC_DX, src_nx=entrymod.TILE_SRC_NX,
+    )
+    tiles = _simple_plan(d["tile_images"])
+    assert tiles.count("MapInPandas") == 1
+    assert _join_nodes(tiles) == _join_nodes(_simple_plan(d["tile_pixels"])) > 0
+    spec = pipeline.DatasetSpec.from_dict(
+        {
+            "source": "pi",
+            "inputs": ["vis"],
+            "t_start": "2024-01-01T00:00:00",
+            "t_end": "2024-01-01T02:00:00",
+            "step": "1 hour",
+            "sampling": {"resolution": 10.0},
+            "domain": {"l_zonal": 40.0, "l_meridional": 40.0},
+        }
+    )
+    scenes = pipeline.build_scene_images(spark, spec, src_dx=10.0, src_nx=4)
+    assert _simple_plan(scenes["images"]).count("MapInPandas") == 1
 
 
 def test_rect_analytics_aux_join_is_shuffle_hash_not_broadcast(spark):

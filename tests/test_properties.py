@@ -972,6 +972,22 @@ def test_connected_components_long_path_fused_steps(spark):
     assert set(got.values()) == {lo}
 
 
+def test_connected_components_budget_exit_raises(spark):
+    """A budget too small for a long path raises instead of emitting
+    labels from an unconverged edge set, and an odd max_iters runs
+    exactly that many star rounds (not the next even number)."""
+    import pytest
+
+    from convml_data_spark.operators.dedup import connected_components
+
+    n = 200
+    ids = [((i * 73) % n) * 1000 + 17 for i in range(n)]
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match=r"in 3 star rounds \(max_iters=3\)"):
+        connected_components(df, max_iters=3)
+
+
 def test_connected_components_fixed_point_accept_is_exact(spark):
     """The r18 accept check verifies R(e) = e directly (R = small_star ∘
     large_star): on a graph that is ALREADY a star set, one fused step
