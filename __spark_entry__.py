@@ -5988,18 +5988,16 @@ def _td_spec_cte() -> str:
               FROM u
             ),
             spl AS (
-              SELECT scene_id,
-                     CASE WHEN rk < CAST(floor(n * 12.0 / 16.0) AS BIGINT)
-                          THEN 'train' ELSE 'study' END AS collection
+              SELECT scene_id, rk, CAST(floor(n * 12.0 / 16.0) AS BIGINT) AS cut
               FROM r
             ),
             idx AS (
-              SELECT scene_id, collection,
-                     row_number() OVER (PARTITION BY collection ORDER BY scene_id) - 1 AS i,
-                     count(*) OVER (PARTITION BY collection) AS n
+              SELECT scene_id,
+                     CASE WHEN rk < cut THEN 'train' ELSE 'study' END AS collection,
+                     rk - CASE WHEN rk < cut THEN 0 ELSE cut END AS i
               FROM spl
             ),
-            sz AS (SELECT collection, max(n) AS n FROM idx GROUP BY collection),
+            sz AS (SELECT collection, count(*) AS n FROM idx GROUP BY collection),
             tr AS (
               SELECT CAST(range AS BIGINT) AS triplet_id,
                      CASE WHEN range < 12 THEN 'train' ELSE 'study' END AS collection
@@ -6826,18 +6824,16 @@ def oracle_sql() -> dict[str, str]:
               FROM u
             ),
             spl AS (
-              SELECT scene_id,
-                     CASE WHEN rk < CAST(floor(n * 30.0 / 40.0) AS BIGINT)
-                          THEN 'train' ELSE 'study' END AS collection
+              SELECT scene_id, rk, CAST(floor(n * 30.0 / 40.0) AS BIGINT) AS cut
               FROM r
             ),
             idx AS (
-              SELECT scene_id, collection,
-                     row_number() OVER (PARTITION BY collection ORDER BY scene_id) - 1 AS i,
-                     count(*) OVER (PARTITION BY collection) AS n
+              SELECT scene_id,
+                     CASE WHEN rk < cut THEN 'train' ELSE 'study' END AS collection,
+                     rk - CASE WHEN rk < cut THEN 0 ELSE cut END AS i
               FROM spl
             ),
-            sz AS (SELECT collection, max(n) AS n FROM idx GROUP BY collection),
+            sz AS (SELECT collection, count(*) AS n FROM idx GROUP BY collection),
             tr AS (
               SELECT CAST(range AS BIGINT) AS triplet_id,
                      CASE WHEN range < 30 THEN 'train' ELSE 'study' END AS collection
@@ -7293,10 +7289,13 @@ def oracle_sql() -> dict[str, str]:
               SELECT doc_id, row_number() OVER (ORDER BY u, doc_id) - 1 AS rk,
                      count(*) OVER () AS n
               FROM u
+            ), spl AS (
+              SELECT doc_id, rk, CAST(floor(n * 3.0 / 4.0) AS BIGINT) AS cut FROM r
             )
             SELECT doc_id,
-                   CASE WHEN rk < CAST(floor(n * 3.0 / 4.0) AS BIGINT) THEN 'train' ELSE 'study' END AS collection
-            FROM r
+                   CASE WHEN rk < cut THEN 'train' ELSE 'study' END AS collection,
+                   CAST(rk - CASE WHEN rk < cut THEN 0 ELSE cut END AS INTEGER) AS collection_index
+            FROM spl
         """,
         "r2_scene_pairs": """
             WITH u AS (
@@ -7309,16 +7308,14 @@ def oracle_sql() -> dict[str, str]:
                      count(*) OVER () AS n
               FROM u
             ), sc AS (
-              SELECT doc_id,
-                     CASE WHEN rk < CAST(floor(n * 3.0 / 4.0) AS BIGINT) THEN 'train' ELSE 'study' END AS collection
-              FROM r
+              SELECT doc_id, rk, CAST(floor(n * 3.0 / 4.0) AS BIGINT) AS cut FROM r
             ), idx AS (
-              SELECT doc_id, collection,
-                     row_number() OVER (PARTITION BY collection ORDER BY doc_id) - 1 AS i,
-                     count(*) OVER (PARTITION BY collection) AS n
+              SELECT doc_id,
+                     CASE WHEN rk < cut THEN 'train' ELSE 'study' END AS collection,
+                     rk - CASE WHEN rk < cut THEN 0 ELSE cut END AS i
               FROM sc
             ), sz AS (
-              SELECT collection, max(n) AS n FROM idx GROUP BY collection
+              SELECT collection, count(*) AS n FROM idx GROUP BY collection
             ), tr AS (
               SELECT CAST(range AS BIGINT) AS triplet_id,
                      CASE WHEN range < 30 THEN 'train' ELSE 'study' END AS collection

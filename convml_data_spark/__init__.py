@@ -7,7 +7,7 @@ The reference is a Luigi-task file pipeline (see its
 operator semantics as declarative DataFrame programs so Catalyst/AQE pick
 the physical plan.  Layout:
 
-- ``session``    — tuned SparkSession builder (AQE, UTC, Arrow, 32 shuffle parts)
+- ``session``    — tuned SparkSession builder (AQE, UTC, Arrow, host-sized local master)
 - ``tables``     — loaders for the driver's star-schema parquet test tables
 - ``operators``  — the SURVEY.md §2 operator inventory (filters, as-of joins,
                    binning, tiler, calendar scans, scene table, sampling,
@@ -16,8 +16,8 @@ the physical plan.  Layout:
 """
 
 from .session import get_spark
-from .tables import load_tables, register_views
+from .tables import load_tables
 
-__all__ = ["get_spark", "load_tables", "register_views"]
+__all__ = ["get_spark", "load_tables"]
 
 __version__ = "0.1.0"

@@ -2,7 +2,7 @@
 functions). Everything here returns Column expressions that stay inside
 whole-stage codegen — no Python UDFs on these paths."""
 
-from .scene_id import make_scene_id, parse_scene_id_source, parse_scene_id_time
+from .scene_id import make_scene_id
 from .text import (
     char_ngrams,
     en_stopword_ratio,
@@ -15,8 +15,6 @@ from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "make_scene_id",
-    "parse_scene_id_source",
-    "parse_scene_id_time",
     "tokens",
     "token_count",
     "punct_ratio",

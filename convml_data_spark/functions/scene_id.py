@@ -1,4 +1,4 @@
-"""Scene-id make/parse — SURVEY §2.8 E1.
+"""Scene-id construction — SURVEY §2.8 E1.
 
 Reference: ``make_scene_id``/``parse_scene_id`` format ids as
 ``{source}__{%Y%m%d%H%M}`` (convml_data/pipeline/scene_sources.py:14-28).
@@ -16,10 +16,3 @@ SCENE_ID_TIME_FORMAT = "yyyyMMddHHmm"
 def make_scene_id(source: Column, t: Column) -> Column:
     return F.concat_ws(SCENE_ID_SEP, source, F.date_format(t, SCENE_ID_TIME_FORMAT))
 
-
-def parse_scene_id_source(scene_id: Column) -> Column:
-    return F.split(scene_id, SCENE_ID_SEP).getItem(0)
-
-
-def parse_scene_id_time(scene_id: Column) -> Column:
-    return F.to_timestamp(F.split(scene_id, SCENE_ID_SEP).getItem(1), SCENE_ID_TIME_FORMAT)

@@ -22,7 +22,6 @@ from .grids import (
     attach_grid_coords,
     bilinear_regrid,
     crop_to_bbox,
-    infer_domain,
     local_tangent_xy,
     nearest_regrid,
     spanning_bbox,
@@ -84,7 +83,6 @@ __all__ = [
     "attach_grid_coords",
     "bilinear_regrid",
     "crop_to_bbox",
-    "infer_domain",
     "local_tangent_xy",
     "nearest_regrid",
     "spanning_bbox",

@@ -1243,8 +1243,8 @@ def select_to_token_budget(
     )
     q = F.col(quality_col)
     # bucket 0 = highest quality; plain sum-of-when, not a HOF lambda
-    # (outer-column refs inside lambdas hit a Catalyst ATTRIBUTE_NOT_FOUND
-    # bug — see sampling._per_collection_scene_index)
+    # (an outer numeric column compared inside a filter() lambda hits a
+    # Catalyst INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in this plan shape)
     bexpr = F.lit(0)
     for c in cuts:
         bexpr = bexpr + F.when(q < F.lit(float(c)), 1).otherwise(0)

@@ -1,4 +1,4 @@
-"""Grid / raster relational kernels — SURVEY §2.10 G1, G4–G7 and §2.3 J7.
+"""Grid / raster relational kernels — SURVEY §2.10 G1, G4, G6, G7 and §2.3 J7.
 
 The reference operates on dense xarray rasters (regridcart/xesmf,
 convml_data/pipeline/regridding.py:98-112, sampling/domain.py:68-225). Here
@@ -56,20 +56,7 @@ def crop_to_bbox(
     ).drop("x_min", "x_max", "y_min", "y_max")
 
 
-# ---------------------------------------------------------------- G5/G6: domains
-
-def infer_domain(
-    points: DataFrame, x_col: str = "x", y_col: str = "y", crop: float = 0.95
-) -> DataFrame:
-    """G5: largest centered domain fitting the data, extent × ``crop``
-    (sampling/domain.py:68-160). 1-row (x_c, y_c, lx, ly)."""
-    return points.agg(
-        ((F.min(x_col) + F.max(x_col)) / 2).alias("x_c"),
-        ((F.min(y_col) + F.max(y_col)) / 2).alias("y_c"),
-        ((F.max(x_col) - F.min(x_col)) * F.lit(crop)).alias("lx"),
-        ((F.max(y_col) - F.min(y_col)) * F.lit(crop)).alias("ly"),
-    )
-
+# ---------------------------------------------------------------- G6: domains
 
 def unit_vector_center(
     points: DataFrame, lat_col: str = "lat", lon_col: str = "lon"

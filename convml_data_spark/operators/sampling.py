@@ -62,9 +62,15 @@ def proportional_split(
     ``counts`` (exact up to flooring, like the reference's allocation).
 
     A deterministic "shuffle": rows are ranked by ``hash_uniform(id)``
-    (ties broken by id), then rank thresholds at ``floor(n · cum_frac)``
-    carve the collections. Ranking uses :func:`global_ranks`, so no stage
-    is a single-task sort.
+    (ties broken by id), then rank thresholds at ``floor(n · cum / total)``
+    (``cum`` the running sum of ``counts``) carve the collections.
+    Ranking uses :func:`global_ranks`, so no stage is a single-task sort.
+
+    Adds ``collection_index`` (INT): the row's 0-based position inside
+    its collection in shuffled order, ``_rank − lo`` where ``lo`` is the
+    collection's first rank. A collection is exactly the rank range
+    ``[lo, hi)``, so the index is dense over ``[0, hi − lo)`` at no extra
+    cost — :func:`pick_scene_pairs` draws scenes by it.
     """
     total = float(sum(counts.values()))
     u = hash_uniform(seed, F.col(id_col))
@@ -75,87 +81,26 @@ def proportional_split(
     ranked, n = global_ranks(
         keyed, "_u", tiebreak=[id_col], cuts=[i / p for i in range(1, p)]
     )
-    assign = None
-    acc = 0.0
+    rank = F.col("_rank")
+    assign = index = None
+    acc, lo = 0.0, 0
     items = list(counts.items())
     for name, c in items[:-1]:
         acc += c
         threshold = int(n * acc / total)
-        cond = F.col("_rank") < F.lit(threshold)
-        assign = F.when(cond, F.lit(name)) if assign is None else assign.when(cond, F.lit(name))
+        cond = rank < F.lit(threshold)
+        if assign is None:
+            assign, index = F.when(cond, F.lit(name)), F.when(cond, rank - lo)
+        else:
+            assign, index = assign.when(cond, F.lit(name)), index.when(cond, rank - lo)
+        lo = threshold
     last = items[-1][0]
     assign = F.lit(last) if assign is None else assign.otherwise(F.lit(last))
-    return ranked.withColumn(collection_col, assign).drop("_u", "_rank")
-
-
-def _per_collection_scene_index(
-    scenes: DataFrame, collection_col: str, scene_id_col: str
-) -> DataFrame:
-    """0-based dense per-collection index ordered by scene id, WITHOUT a
-    per-collection window: collections are coarse keys (2–3 values), so
-    ``row_number() over (partition by collection)`` funnels the whole
-    scene table through 2–3 tasks. Instead the scene-id axis gets range
-    BUCKETS from a bounded deterministic sample (cuts only balance bucket
-    sizes — any cut set yields identical ranks), per-(collection, bucket)
-    ``row_number`` windows run in parallel, and each bucket's offset plus
-    the collection total arrive via a window-over-aggregate relation (the
-    :func:`stratified_split` pattern — executor-side, never a driver
-    offsets collect). Returns (collection, scene_id, _i, _n).
-    """
-    from pyspark.sql import Window
-
-    spark = scenes.sparkSession
-    p = max(spark.sparkContext.defaultParallelism, 2)
-    base = scenes.select(collection_col, scene_id_col)
-    # bounded plan-time sample (≤ 8·P scalar rows) in md5 order — a
-    # deterministic uniform draw; every ~8th sampled value becomes a cut.
-    # Raw values (not string casts) so cut comparison uses the SAME
-    # comparator as the ranking orderBy for any id type.
-    sampled = sorted(
-        r[0]
-        for r in base.select(F.col(scene_id_col).alias("_s"))
-        .orderBy(F.md5(F.col("_s").cast("string")))
-        .limit(8 * p)
-        .collect()
-        # exclude NULL and (for float ids) NaN from the cut candidates:
-        # both still RANK correctly (NULL counts 0 cuts = first bucket,
-        # NaN counts all cuts = last bucket, matching Spark's sort
-        # order), but NaN breaks Python's sorted() below
-        if r[0] is not None and r[0] == r[0]
-    )
-    step = max(len(sampled) // p, 1)
-    cuts = sorted(set(sampled[step::step]))
-    # sum-of-whens cut count, NOT size(filter(array, lambda)): the
-    # higher-order-function lambda's outer column reference hits a
-    # Catalyst INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when the id column is
-    # numeric (regression-tested); the plain CASE chain stays inside
-    # whole-stage codegen anyway. ``x >= cut`` counts the same cuts as
-    # ``cut <= x``: NULL -> 0 (bucket 0, sorts first), float NaN ->
-    # every cut (last bucket — Spark comparisons treat NaN as greater
-    # than all numerics, same as its sort order), so bucket assignment
-    # stays monotone in the orderBy comparator.
-    b = F.lit(0)
-    for c in cuts:
-        b = b + F.when(F.col(scene_id_col) >= F.lit(c), 1).otherwise(0)
-    parts = base.withColumn("_b", b.cast("int"))
-    cells = parts.groupBy(collection_col, "_b").agg(F.count("*").alias("_c"))
-    w_off = Window.partitionBy(collection_col).orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    off = cells.select(
-        collection_col,
-        "_b",
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_c").over(Window.partitionBy(collection_col)).alias("_n"),
-    )
-    # no broadcast hint: the ranking window repartitions by
-    # (collection, _b) anyway, so a shuffle join reuses that exchange;
-    # AQE still broadcasts the |collections|·P-row off relation when tiny
-    w = Window.partitionBy(collection_col, "_b").orderBy(scene_id_col)
+    index = rank - lo if index is None else index.otherwise(rank - lo)
     return (
-        parts.join(off, [collection_col, "_b"])
-        .withColumn("_i", F.row_number().over(w) - 1 + F.col("_off"))
-        .drop("_b", "_off")
+        ranked.withColumn(collection_col, assign)
+        .withColumn("collection_index", index.cast("int"))
+        .drop("_u", "_rank")
     )
 
 
@@ -170,32 +115,32 @@ def pick_scene_pairs(
     """R2: per triplet, two DISTINCT deterministic-random scenes from the
     triplet's collection — (anchor_scene, distant_scene).
 
+    ``scenes`` must be a :func:`proportional_split` output: its
+    ``collection_index`` numbers each collection densely in shuffled
+    order, the order the reference leaves a collection in (shuffle, then
+    allocate), so the scene index is a projection — no second ranking.
+
     Index math: ``anchor = floor(u_a · n)``; ``distant`` is drawn from the
     remaining ``n-1`` slots and shifted past the anchor, so distinctness is
-    structural, not retry-based. Scene indices come from the bucketed
-    per-collection rank decomposition
-    (:func:`_per_collection_scene_index` — parallel per-(collection,
-    bucket) windows, never a collection-wide sort task); the
-    triplet→scene lookup is two equi-joins on (collection, index) —
-    broadcastable when the scene table is small.
+    structural, not retry-based. The triplet→scene lookup is two
+    equi-joins on (collection, index) — broadcastable when the scene
+    table is small.
     """
-    idx = _per_collection_scene_index(scenes, collection_col, scene_id_col)
     t = triplets.select(
         F.col(triplet_id_col),
         F.col(collection_col),
         hash_uniform(seed, F.lit("anchor"), F.col(triplet_id_col)).alias("_ua"),
         hash_uniform(seed, F.lit("distant"), F.col(triplet_id_col)).alias("_ud"),
     )
-    # collection sizes straight off the scene table — no need to execute
-    # the ranking windows just to learn |collection|
     sizes = scenes.groupBy(collection_col).agg(F.count("*").alias("_n"))
     t = t.join(F.broadcast(sizes), collection_col)
     anchor_i = F.floor(F.col("_ua") * F.col("_n")).cast("int")
     d0 = F.floor(F.col("_ud") * (F.col("_n") - 1)).cast("int")
     distant_i = F.when(d0 >= anchor_i, d0 + 1).otherwise(d0)
     t = t.withColumn("_ai", anchor_i).withColumn("_di", distant_i)
-    a = idx.select(collection_col, F.col("_i").alias("_ai"), F.col(scene_id_col).alias("anchor_scene"))
-    d = idx.select(collection_col, F.col("_i").alias("_di"), F.col(scene_id_col).alias("distant_scene"))
+    idx = F.col("collection_index")
+    a = scenes.select(collection_col, idx.alias("_ai"), F.col(scene_id_col).alias("anchor_scene"))
+    d = scenes.select(collection_col, idx.alias("_di"), F.col(scene_id_col).alias("distant_scene"))
     return (
         t.join(a, [collection_col, "_ai"])
         .join(d, [collection_col, "_di"])
@@ -329,7 +274,7 @@ def stratified_split(
     """Stratified R1: EXACT proportional allocation within every group
     (source / language / domain) — each group independently splits with
     :func:`proportional_split` semantics (rank by md5 uniform, threshold
-    at ``floor(n_g · cum_frac)``).
+    at ``floor(n_g · cum / total)``, multiplied before dividing).
 
     Scale design: a per-group ``row_number`` window would funnel a whole
     group through one task (stratification keys are coarse — a source at
@@ -391,7 +336,7 @@ def stratified_split(
     items = list(counts.items())
     for name, c in items[:-1]:
         acc += c
-        cond = F.col("_rank") < F.floor(F.col("_n_g") * F.lit(acc / total))
+        cond = F.col("_rank") < F.floor(F.col("_n_g") * F.lit(acc) / F.lit(total))
         assign = (
             F.when(cond, F.lit(name)) if assign is None else assign.when(cond, F.lit(name))
         )

@@ -289,7 +289,9 @@ def build_triplet_dataset(
     anchor scene and distant tiles on the distant scene
     (sampling/triplets.py pairing); for ``trajectories``, one tile per
     scene at the snapped trajectory point; for ``rect-slidingwindow``, the
-    W5 origin grid crossed with every scene.
+    W5 origin grid crossed with every scene. ``splits`` is the R1 split
+    (scene_id, collection, collection_index); ``pairs`` draws its scenes
+    by that index, so the scene table is ranked once, by the split.
 
     Scale: every stage is the already-audited operator (global-rank split,
     broadcast pair lookup, expression-seeded placement, bucketed as-of) —

@@ -9,7 +9,7 @@ Design notes (100 TB posture):
   model is UTC scene/aux time (convml_data/utils/time.py:7-34); pinning
   removes driver-local-TZ nondeterminism from date_format/date_trunc.
 - Arrow enabled for the pandas-UDF slow path (raster kernels, ML inference).
-- shuffle.partitions defaults to 2x local cores for local runs; on a real
+- shuffle.partitions defaults to the local core count (at least 8); on a real
   cluster this is overridden by AQE's coalescing from an intentionally high
   initial number.
 """
@@ -95,10 +95,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for the test/bench environment; unset it on a real cluster.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``; unset, that is
+    the number of CPUs this process may run on (what ``nproc`` prints).
+    Pass ``master`` or set ``$SPARK_MASTER`` on a real cluster.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULT_CONF)

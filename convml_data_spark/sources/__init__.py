@@ -29,7 +29,6 @@ from convml_data_spark.tables import (  # noqa: F401 (re-export)
     TABLE_NAMES,
     load_table,
     load_tables,
-    register_views,
 )
 
 __all__ = [
@@ -41,5 +40,4 @@ __all__ = [
     "TABLE_NAMES",
     "load_table",
     "load_tables",
-    "register_views",
 ]

@@ -298,13 +298,14 @@ def test_token_budget_cumsum_partitions_by_bucket(spark):
 
 
 def test_scene_pair_ranking_partitions_by_bucket(spark):
-    """pick_scene_pairs' per-collection scene index must rank per
-    (collection, BUCKET) — a collection-only row_number partition funnels
-    a million-scene campaign through 2–3 tasks (the last coarse-key
-    window removed in round 9). Gate: every row_number window in the plan
-    carries a ``_b`` bucket column in its partition spec, and the offset
-    relation stays executor-side (no driver round-trip scan nodes beyond
-    the bounded literal cut array)."""
+    """R2 ranks the scenes once: pick_scene_pairs indexes each collection
+    by the rank proportional_split already computed, so the only
+    row_number is that split's global rank, partitioned per ``_b``
+    bucket (a collection-only partition would funnel a million-scene
+    campaign through 2–3 tasks). Gate: every row_number window carries
+    ``_b`` in its partition spec, and NO window of any kind is
+    partitioned by ``collection`` — a second per-collection ranking
+    would show up as one."""
     p = plan_of(spark, "r2_scene_pairs")
     assert "CartesianProduct" not in p
     needle = "row_number() windowspecdefinition("
@@ -326,7 +327,8 @@ def test_scene_pair_ranking_partitions_by_bucket(spark):
         assert "_b#" in part, f"row_number window without bucket partition: {args[:160]}"
         found += 1
         i = k
-    assert found >= 2  # proportional_split rank + per-collection scene index
+    assert found >= 1  # proportional_split's bucketed global rank
+    assert "windowspecdefinition(collection#" not in p
     assert "ExistingRDD" not in p
 
 
@@ -424,6 +426,8 @@ def test_spec_tile_paths_broadcast_bounded_sides(spark):
     p = plan_of(spark, "spec_tile_data")
     assert "SortMergeJoin" not in p
     assert "BroadcastHashJoin" in p
+    # scene pairing reads the split's own rank: no per-collection window
+    assert "windowspecdefinition(collection#" not in p
     # the analytics key's visible plan starts at its lazy checkpoint (the
     # joins live upstream), so gate the composed PROGRAM instead
     from convml_data_spark import pipeline
@@ -588,7 +592,7 @@ SCAN_CEILINGS = {
     "multimodal_features": 1, "multimodal_frames": 1, "neardup_cosine_pairs": 0, "neardup_edit_distance": 6,
     "neardup_lsh_pairs": 0, "o3_distinct": 1, "o4_topk": 1, "pack_chunks": 1,
     "pii_scrub": 1, "q3_shipping_priority": 3, "quality_classifier": 1, "quality_terciles": 0,
-    "r1_split": 1, "r2_scene_pairs": 5, "r5_triplet_locations": 0, "s2_goes16_query": 0,
+    "r1_split": 1, "r2_scene_pairs": 3, "r5_triplet_locations": 0, "s2_goes16_query": 0,
     "s3_calendar_scan": 0, "s4_era5_manifest": 0, "s5_calendar_offset_missing": 0, "s6_ceres_manifest": 0,
     "sample_quality_weighted": 1, "scene_table": 1, "select_token_budget": 2, "simhash": 1,
     "similarity_ivf_topk": 2, "similarity_lsh_topk": 2, "similarity_pq_topk": 3, "similarity_sq_topk": 2,

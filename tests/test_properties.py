@@ -350,37 +350,54 @@ def test_stratified_split_keeps_null_group_rows(spark):
     assert sum(r["collection"] == "a" for r in nulls) == 10  # floor(20·0.5)
 
 
-def test_scene_index_decomposition_matches_window_with_nan_null_ids(spark):
-    """The bucketed per-collection scene index must equal the plain
-    ``row_number() over (partition by collection order by id)`` it
-    replaced — including double ids with NaN and NULL. Spark's comparison
-    operators treat NaN as greater than every numeric (same as its sort
-    order and DuckDB's), so the cut-count bucket expression stays
-    monotone in the orderBy comparator and NaN rows keep their
-    sort-last rank; NULLs sort first and count zero cuts (bucket 0)."""
-    from pyspark.sql import Window
+def test_stratified_split_multiplies_before_dividing(spark):
+    """Thresholds are floor(n_g · cum / total), the proportional_split
+    arithmetic: 90 docs at 7:3 give 63/27. Rounding the fraction first
+    (floor(90 · 0.7) = floor(62.99…)) under-allocates to 62."""
+    from convml_data_spark.operators.sampling import stratified_split
 
-    from convml_data_spark.operators.sampling import _per_collection_scene_index
+    df = spark.range(90).select(F.col("id").alias("doc_id"), F.lit("g").alias("source"))
+    out = stratified_split(df, "source", {"a": 7, "b": 3}, seed=2)
+    got = {r["collection"]: r["count"] for r in out.groupBy("collection").count().collect()}
+    assert got == {"a": 63, "b": 27}
+    split = proportional_split(df, "doc_id", {"a": 7, "b": 3}, seed=2)
+    assert split.where(F.col("collection") == "a").count() == 63
 
-    rows = []
-    for i in range(200):
-        rows.append(("A" if i % 3 else "B", float(i % 97) * 1.5))
-    rows += [("A", float("nan")), ("B", float("nan")), ("A", None), ("B", None)]
-    scenes = spark.createDataFrame(rows, "collection string, scene_id double")
-    got = _per_collection_scene_index(scenes, "collection", "scene_id")
-    w = Window.partitionBy("collection").orderBy("scene_id")
-    want = (
-        scenes.select("collection", "scene_id")
-        .withColumn("_i", F.row_number().over(w) - 1)
-        .withColumn("_n", F.count("*").over(Window.partitionBy("collection")))
+
+def test_scene_pairs_draw_from_shuffled_collection_index(spark):
+    """R1 → R2 without a DuckDB replay: ``collection_index`` numbers each
+    collection densely in its shuffled (md5) order, every pair is two
+    distinct scenes of the triplet's own collection, and the pairs are
+    independent of partitioning."""
+    from convml_data_spark.operators.sampling import hash_uniform, pick_scene_pairs
+
+    ids = spark.range(500).select(F.col("id").alias("scene_id"))
+    counts = {"train": 7, "study": 3}
+    split = proportional_split(ids, "scene_id", counts, seed=11)
+    rows = split.withColumn("_u", hash_uniform(11, F.col("scene_id"))).collect()
+    by_coll: dict[str, list] = {}
+    for r in rows:
+        by_coll.setdefault(r["collection"], []).append((r["collection_index"], r["_u"]))
+    for members in by_coll.values():
+        members.sort()
+        assert [i for i, _ in members] == list(range(len(members)))
+        us = [u for _, u in members]
+        assert us == sorted(us)  # index order is the shuffle order
+
+    triplets = spark.range(200).select(
+        F.col("id").alias("triplet_id"),
+        F.when(F.col("id") < 140, F.lit("train")).otherwise(F.lit("study")).alias("collection"),
     )
+    pairs = pick_scene_pairs(triplets, split, seed=4).collect()
+    assert len(pairs) == 200
+    home = {r["scene_id"]: r["collection"] for r in rows}
+    for r in pairs:
+        assert r["anchor_scene"] != r["distant_scene"]
+        assert home[r["anchor_scene"]] == r["collection"] == home[r["distant_scene"]]
 
-    def key(r):
-        sid = r["scene_id"]
-        sid = "NaN" if sid is not None and sid != sid else sid
-        return (r["collection"], str(sid), r["_i"], r["_n"])
-
-    assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
+    split13 = proportional_split(ids.repartition(13), "scene_id", counts, seed=11)
+    again = pick_scene_pairs(triplets.repartition(13), split13, seed=4)
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, pairs))
 
 
 def test_mixture_sampling_tracks_planned_rates(spark):
