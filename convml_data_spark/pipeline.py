@@ -1278,9 +1278,14 @@ def materialize(
     Completion is Spark's own _SUCCESS marker, so a half-written output
     from a crashed job does NOT count as done — stronger than the
     reference's bare file-existence check (regridding.py:93-117 re-checks
-    inside run() for exactly that race).
+    inside run() for exactly that race). The marker is looked up through
+    Hadoop's ``FileSystem`` for the path's scheme, so ``file://``,
+    ``hdfs://`` and ``s3a://`` sinks skip as plain local paths do.
     """
-    done = os.path.exists(os.path.join(path, "_SUCCESS"))
+    sc = df.sparkSession.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = Path(path).getFileSystem(sc._jsc.hadoopConfiguration())
+    done = fs.exists(Path(path, "_SUCCESS"))
     if done and not overwrite:
         return False
     writer = df.write.mode("overwrite").format(fmt)

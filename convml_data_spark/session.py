@@ -12,6 +12,19 @@ Design notes (100 TB posture):
 - shuffle.partitions defaults to the local core count (at least 8); on a real
   cluster this is overridden by AQE's coalescing from an intentionally high
   initial number.
+- The codegen cache holds a whole build, and generated class names carry no
+  stage number, so a repeated build reuses the classes it already compiled.
+  One build compiles about 200 Janino classes (measured on 4 cores, read
+  from ``CodegenMetrics``: 212-217 on perfbench's ``scene_dataset``,
+  196-201 on ``doc_curation``), but Spark's cache keeps 100 by default, so
+  each build evicted the classes the next one needed and every warm build
+  compiled 190-214 of them again (~1.4 s of Janino per build, and HotSpot
+  starts each new class interpreted). The class name is part of the cache
+  key, and with the per-query stage number in it
+  (``GeneratedIteratorForCodegenStage19``) identical code under another
+  stage number missed the cache. Without it, identical stages share one
+  class, within a build too: cold builds compile 166 and 160 classes, and
+  a warm build 0-2.
 """
 
 from __future__ import annotations
@@ -84,6 +97,12 @@ _DEFAULT_CONF = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.ui.enabled": "false",
+    # Static: applies only when get_spark creates the session. A benchmark
+    # session (one cold build, then warm builds) held at most ~260 classes;
+    # the module docstring has the per-build counts.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # Key generated classes by their code, not by the query's stage number.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
 
 

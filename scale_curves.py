@@ -111,15 +111,14 @@ def main() -> None:
     if not os.path.exists(os.path.join(synth_big, "embeddings.parquet")):
         build_synthetic("/root/testdata/sf0.1", synth_big, REPLICAS_BIG)
 
-    from pyspark.sql import SparkSession
+    from convml_data_spark import get_spark
 
-    def session(cores: str) -> "SparkSession":
-        s = (
-            SparkSession.builder.master(f"local[{cores}]")
-            .config("spark.sql.shuffle.partitions", cores)
-            .config("spark.driver.memory", "48g")
-            .config("spark.ui.enabled", "false")
-            .getOrCreate()
+    def session(cores: str):
+        # the engine's session defaults, at this script's core count and heap
+        s = get_spark(
+            master=f"local[{cores}]",
+            shuffle_partitions=int(cores),
+            extra_conf={"spark.driver.memory": "48g"},
         )
         s.sparkContext.setLogLevel("ERROR")
         return s

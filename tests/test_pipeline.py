@@ -117,6 +117,16 @@ def test_cf_metadata_survives_parquet_roundtrip(spark, tmp_path):
     assert md["units"] == "1" and md["long_name"] == "normalized brightness"
 
 
+def test_materialize_skips_complete_uri_sink(spark, tmp_path):
+    """The _SUCCESS skip holds on a scheme-qualified path, not only on a
+    bare local one: the marker is looked up through Hadoop's FileSystem,
+    so a second call on the same ``file://`` sink writes nothing."""
+    df = spark.range(5)
+    path = "file://" + os.path.join(str(tmp_path), "out")
+    assert pipeline.materialize(df, path) is True
+    assert pipeline.materialize(df, path) is False
+
+
 def test_materialize_json_format(spark, tmp_path):
     """S11: the DBTarget-analog small-relation JSON sink."""
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
