@@ -18,10 +18,11 @@ driver-side state):
    explode (constant fan-out 9) — shuffle ∝ 9·n, never n².
 2. **Core points**: neighbor count within eps (self included) ≥ min_pts —
    one groupBy over the candidate pairs.
-3. **Clusters**: connected components over core–core eps-edges via the
-   alternating large-star/small-star contraction already used for dedup
-   (:func:`~.dedup.connected_components`, O(log² n) rounds); a cluster's
-   label is its minimum core id.
+3. **Clusters**: connected components over core–core eps-edges
+   (:func:`~.dedup.connected_components`, shared with dedup): one driver
+   pass when the edges fit under ``spark.sql.autoBroadcastJoinThreshold``,
+   otherwise the alternating large-star/small-star contraction in
+   O(log² n) rounds; a cluster's label is its minimum core id.
 4. **Border points**: non-core within eps of ≥1 core join the component of
    their MINIMUM core neighbor (standard DBSCAN leaves border assignment
    scan-order-dependent; pinning argmin-by-id makes it deterministic and
@@ -32,7 +33,8 @@ Scale: dense areas concentrate in few cells — per-cell point counts bound
 the join fan-out; a pathological all-points-one-cell input degrades to the
 per-cell pair square, which is the correct DBSCAN answer for that data
 (every pair IS a neighbor pair) and still shuffles on the cell key, not a
-cartesian. 100 TB: grid join + groupBy + CC rounds, all hash-partitioned.
+cartesian. 100 TB: grid join + groupBy + CC rounds, all hash-partitioned
+(above the broadcast threshold, CC never holds edges on the driver).
 """
 
 from __future__ import annotations

@@ -16,10 +16,15 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import kgram_hashes, ngrams_from_tokens, tokens, winnow_select
+
+_log = logging.getLogger(__name__)
 
 # Affine minhash parameters: h_i(x) = (a_i * x + b_i) mod p over a 61-bit
 # Mersenne prime; a/b fixed (seeded) so signatures are reproducible across
@@ -717,6 +722,62 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
+def _driver_labels(p0: DataFrame, rows: int) -> DataFrame | None:
+    """Label a canonical pair list (``u <= v``, self-pairs included) on the
+    driver in one pass; None when ``p0`` holds more than ``rows`` rows.
+
+    ``rows`` is an accumulator reading, so it only bounds the read: a
+    ``limit(rows + 1)`` that returns at most ``rows`` rows returned all of
+    ``p0``, and the driver never holds more than ``rows + 1``. Ids stay in
+    Arrow (no Python object per id) and are factorised in sorted order,
+    which for integral and UTF-8-binary string ids is Spark's
+    ``least``/``min`` order, so each tree's root is its smallest index and
+    so the component minimum.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = p0.limit(rows + 1).toArrow()
+    if tbl.num_rows > rows:
+        return None
+    # least/greatest skip NULL, so u is NULL only on a (NULL, NULL) pair,
+    # which labels itself NULL as on the star-round path
+    edges = tbl.filter(pc.is_valid(tbl.column("u")))
+    ends = pa.concat_arrays(
+        [edges.column(c).combine_chunks() for c in ("u", "v")]
+    )
+    ids = pc.unique(ends)
+    ids = ids.take(pc.sort_indices(ids))
+    idx = pc.index_in(ends, value_set=ids).to_numpy()
+    a, b = idx[: edges.num_rows], idx[edges.num_rows:]
+    # union-find with vectorised rounds: hook each root onto the smallest
+    # root across its edges, then jump pointers until every node points at
+    # its root. Parents only decrease, so each round removes at least one
+    # root, until no edge spans two trees.
+    root = np.arange(len(ids))
+    ra, rb = root[a], root[b]
+    while not np.array_equal(ra, rb):
+        lo = np.minimum(ra, rb)
+        np.minimum.at(root, ra, lo)
+        np.minimum.at(root, rb, lo)
+        jumped = root[root]
+        while not np.array_equal(jumped, root):
+            root, jumped = jumped, jumped[jumped]
+        ra, rb = root[a], root[b]
+    cols = [ids, ids.take(pa.array(root))]
+    if edges.num_rows < tbl.num_rows:
+        cols = [pa.concat_arrays([c, pa.nulls(1, c.type)]) for c in cols]
+    field = p0.schema["u"]
+    schema = T.StructType([
+        T.StructField("id", field.dataType, field.nullable),
+        T.StructField("component", field.dataType, field.nullable),
+    ])
+    return p0.sparkSession.createDataFrame(
+        pa.table(cols, names=["id", "component"]), schema=schema
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -776,9 +837,25 @@ def connected_components(
     both checkpoint kinds). Only nodes that appear in ``pairs`` are
     labelled (self-pairs label themselves).
 
+    Small graphs skip the star rounds. The normalized pair list is
+    checkpointed first either way, and its observation also sums the
+    pairs' bytes. When those bytes are at most
+    ``spark.sql.autoBroadcastJoinThreshold`` (``-1`` turns this off, as it
+    turns off broadcasting) and the ids are integral or UTF-8-binary
+    strings, the pairs are collected through Arrow with a row limit and
+    labelled on the driver by a vectorised union-find
+    (:func:`_driver_labels`): one job after the checkpoint instead of a
+    few dozen. The limit makes that read exact. If it finds more rows
+    than were observed, the star rounds run as above; above the
+    threshold they are the only path. A near-dup graph after an LSH join
+    is usually in the small regime: about a hundred pairs at 2000
+    documents.
+
     At most ``max_iters`` star rounds run. If the budget runs out before
     the exact fixed-point check passes, a ``RuntimeError`` names the
-    rounds run; no labels are emitted from an unconverged edge set.
+    rounds run; no labels are emitted from an unconverged edge set. One
+    INFO line on this module's logger reports the edges observed, the
+    path taken and the star rounds run.
     """
     from pyspark.sql import Observation
 
@@ -812,16 +889,40 @@ def connected_components(
     # node set derive from it, and `pairs` is typically an expensive
     # candidate-generation plan (cosine scoring, LSH verify) that must not
     # re-execute for the final node labelling. The initial signature rides
-    # on the same checkpoint execution via observe().
+    # on the same checkpoint execution via observe(), and so do the row
+    # count and bytes the one-pass gate reads.
     obs0 = Observation()
-    p0 = (
-        pairs.select(
-            F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
-        )
-        .distinct()
-        .observe(obs0, *_sig_exprs())
+    p0 = pairs.select(
+        F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
+    ).distinct()
+    id_type = p0.schema["u"].dataType
+    sql_conf = p0.sparkSession._jsparkSession.sessionState().conf()
+    threshold = int(sql_conf.autoBroadcastJoinThreshold())
+    gated = threshold >= 0 and (
+        isinstance(id_type, T.IntegralType)
+        or (isinstance(id_type, T.StringType) and id_type.isUTF8BinaryCollation())
     )
-    p0 = materialize_for_reuse(p0, durable=durable, eager=True)
+    gate_exprs = []
+    if gated:
+        pair_bytes = (
+            F.octet_length("u") + F.octet_length("v")
+            if isinstance(id_type, T.StringType)
+            else F.lit(16)  # two longs, the widest integral id
+        )
+        gate_exprs = [F.count(F.lit(1)).alias("rows"), F.sum(pair_bytes).alias("bytes")]
+    p0 = materialize_for_reuse(
+        p0.observe(obs0, *_sig_exprs(), *gate_exprs), durable=durable, eager=True
+    )
+    sig = _sig_of(obs0)
+    n_edges = sig[0] or 0
+    if gated and (obs0.get["bytes"] or 0) <= threshold:
+        labels = _driver_labels(p0, obs0.get["rows"])
+        if labels is not None:
+            _log.info(
+                "connected_components: %d edges observed, one-pass path, "
+                "0 star rounds", n_edges,
+            )
+            return labels
     nodes = (
         p0.select(F.col("u").alias("id"))
         .unionAll(p0.select(F.col("v").alias("id")))
@@ -843,15 +944,10 @@ def connected_components(
         a, b = [tuple(r[c] for c in ("n", "su", "sv", "sh")) for r in rows]
         return a == b
 
-    sig = _sig_of(obs0)
-    # Empty edge set (no pairs, or self-pairs only): zero star rounds are
-    # needed, and the loop's MID-PLAN observation below would never fire
-    # (AQE's runtime empty-relation propagation drops the inner
-    # CollectMetrics stage once a shuffle reports 0 rows — root-level
-    # observations survive, mid-plan ones do not). The n==0/NULL
-    # accumulator reading is only the TRIGGER; the skip is accepted on an
-    # exact isEmpty() probe, so a retry-distorted observation can cost
-    # one tiny job, never a wrong answer.
+    # Gate off (or exceeded): an empty edge set needs no rounds, and the
+    # loop's mid-plan observation would never fire on it (AQE drops the
+    # CollectMetrics stage behind a shuffle that reports 0 rows). The
+    # n==0/NULL reading is only the trigger; isEmpty() confirms it.
     converged = not sig[0] and e.isEmpty()
     rounds = 0
     while not converged and rounds < max_iters:
@@ -898,6 +994,10 @@ def connected_components(
             f"connected_components did not converge in {rounds} star rounds "
             f"(max_iters={max_iters})"
         )
+    _log.info(
+        "connected_components: %d edges observed, star-round path, "
+        "%d star rounds", n_edges, rounds,
+    )
     # at the fixed point every component is a star centered at its minimum:
     # component(x) = min(neighbors ∪ {x}); unpaired/self-pair nodes keep
     # their own id via the left join
@@ -925,9 +1025,11 @@ def canonical_survivors(
 
     Composition: :func:`connected_components` labels each paired node
     with its cluster minimum; non-canonical members (``id != component``)
-    are removed with a left-anti join. Both steps are hash-partitioned
-    joins — no driver state, no cross product. ``durable`` threads through
-    to the CC rounds' per-iteration materialization.
+    are removed with a left-anti join. A pair list under
+    ``spark.sql.autoBroadcastJoinThreshold`` is labelled in one driver
+    pass and joins back as a local relation; above it, both steps are
+    hash-partitioned joins — no driver state, no cross product.
+    ``durable`` threads through to the CC checkpoints.
     """
     comp = connected_components(pairs, id_a=id_a, id_b=id_b, durable=durable)
     drop = comp.where(F.col("id") != F.col("component")).select(

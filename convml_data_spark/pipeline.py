@@ -1500,8 +1500,10 @@ def build_curation_pipeline(
 
     Every stage is the already-certified operator; composition adds only
     semi/anti equi-joins on the document id (column-name contracts, no
-    action boundaries between stages — the CC rounds inside stage 5 are
-    the one bounded-iteration exception, O(log² n) jobs by design).
+    action boundaries between stages — connected components inside stage
+    5 is the one exception: it checkpoints its pairs, then labels a graph
+    under ``spark.sql.autoBroadcastJoinThreshold`` in one driver pass
+    (one more job) and a larger one in O(log² n) star-round jobs).
     Stage filters run in corpus order, so each stage's input is the
     previous stage's survivors — at 100 TB the expensive stages (MinHash
     shingling, Bloom probing, packing) see only the cleaned fraction.

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
@@ -22,6 +23,26 @@ TABLE_NAMES = (
 def spark():
     s = get_spark(app_name="convml-data-spark-tests", shuffle_partitions=8)
     yield s
+
+
+# connected_components labels a small graph on the driver unless
+# spark.sql.autoBroadcastJoinThreshold is -1: None keeps the session's
+# threshold (one-pass path), "-1" forces the star rounds
+CC_THRESHOLDS = (None, "-1")
+
+
+@contextlib.contextmanager
+def broadcast_threshold(spark, value):
+    """Run the block with ``spark.sql.autoBroadcastJoinThreshold`` set to
+    ``value`` (None leaves it as it is), then restore the old value."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if value is not None:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 @pytest.fixture(scope="session")

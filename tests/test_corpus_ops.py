@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from convml_data_spark.functions import text as T
 from convml_data_spark.operators import corpus
 from convml_data_spark.operators.dedup import canonical_survivors
+from tests.conftest import CC_THRESHOLDS, broadcast_threshold
 
 
 def _docs(spark, rows):
@@ -117,12 +118,14 @@ def test_canonical_survivors_collapse(spark):
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (5, 6)], "id_a long, id_b long"
     )
-    got = sorted(
-        r["doc_id"]
-        for r in canonical_survivors(ids, pairs, id_col="doc_id").collect()
-    )
-    # cluster {0,1,2} -> keep 0; {5,6} -> keep 5; others untouched
-    assert got == [0, 3, 4, 5, 7, 8, 9]
+    for threshold in CC_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            got = sorted(
+                r["doc_id"]
+                for r in canonical_survivors(ids, pairs, id_col="doc_id").collect()
+            )
+        # cluster {0,1,2} -> keep 0; {5,6} -> keep 5; others untouched
+        assert got == [0, 3, 4, 5, 7, 8, 9], threshold
 
 
 def test_gate_carry_cols_ride_through(spark):

@@ -9,7 +9,7 @@ import math
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
+from tests.conftest import CC_THRESHOLDS, SF_DIR, broadcast_threshold
 
 from convml_data_spark.operators import (
     bilinear_regrid,
@@ -673,18 +673,22 @@ def test_mixture_rates_zero_token_source_gets_zero_rate(spark):
 
 def test_connected_components_string_ids(spark):
     """CC works (and converges) on string ids — the normal id shape for
-    text dedup (URLs, content hashes)."""
+    text dedup (URLs, content hashes) — on both paths."""
     from convml_data_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
         [("doc_a", "doc_b"), ("doc_b", "doc_c"), ("doc_x", "doc_y")],
         "id_a string, id_b string",
     )
-    comp = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
-    assert comp == {
-        "doc_a": "doc_a", "doc_b": "doc_a", "doc_c": "doc_a",
-        "doc_x": "doc_x", "doc_y": "doc_x",
-    }
+    for threshold in CC_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            comp = {
+                r["id"]: r["component"] for r in connected_components(pairs).collect()
+            }
+        assert comp == {
+            "doc_a": "doc_a", "doc_b": "doc_a", "doc_c": "doc_a",
+            "doc_x": "doc_x", "doc_y": "doc_x",
+        }, threshold
 
 
 def test_fit_sample_is_partition_layout_independent(spark):
@@ -983,10 +987,12 @@ def test_connected_components_long_path_fused_steps(spark):
     ids = [((i * 73) % n) * 1000 + 17 for i in range(n)]  # scrambled, distinct
     edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
     lo = min(ids)
-    assert len(got) == n
-    assert set(got.values()) == {lo}
+    for threshold in CC_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+        assert len(got) == n
+        assert set(got.values()) == {lo}, threshold
 
 
 def test_connected_components_budget_exit_raises(spark):
@@ -1001,8 +1007,72 @@ def test_connected_components_budget_exit_raises(spark):
     ids = [((i * 73) % n) * 1000 + 17 for i in range(n)]
     edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match=r"in 3 star rounds \(max_iters=3\)"):
-        connected_components(df, max_iters=3)
+    # the subject is the star-round budget: keep this small graph off the
+    # one-pass path
+    with broadcast_threshold(spark, "-1"):
+        with pytest.raises(RuntimeError, match=r"in 3 star rounds \(max_iters=3\)"):
+            connected_components(df, max_iters=3)
+
+
+def test_connected_components_small_graph_takes_one_pass(spark):
+    """A graph whose pairs fit under spark.sql.autoBroadcastJoinThreshold
+    is labelled on the driver: after the normalized pairs' checkpoint,
+    connected_components launches exactly one job (the guarded collect),
+    and its labels equal the star rounds'. The gate compares the pairs'
+    UTF-8 bytes with the threshold, a collect that finds more rows than
+    the bound falls through, and a (NULL, NULL) pair labels itself NULL
+    as on the star-round path."""
+    from convml_data_spark.operators.dedup import _driver_labels, connected_components
+
+    pairs = spark.createDataFrame(
+        [("u/c", "u/b"), ("u/b", "u/a"), ("u/x", "u/x"), ("u/a", "u/a"),
+         ("u/y", "u/z"), ("u/z", "u/y")],
+        "id_a string, id_b string",
+    )  # 5 distinct canonical pairs of 6 bytes each: 30 bytes
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(threshold):
+        group = f"cc-one-pass-{threshold}"
+        sc.setJobGroup(group, "connected_components job count")
+        try:
+            with broadcast_threshold(spark, threshold):
+                got = {
+                    r["id"]: r["component"] for r in connected_components(pairs).collect()
+                }
+        finally:
+            sc.setJobGroup("", "")
+        jobs = sorted(tracker.getJobIdsForGroup(group))
+        # a skipped stage may have no info left in a long session
+        names = [
+            [i.name for i in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds) if i]
+            for j in jobs
+        ]
+        first_ckpt = next(
+            i for i, ns in enumerate(names) if any("checkpoint" in n.lower() for n in ns)
+        )
+        return got, len(jobs) - first_ckpt - 1
+
+    want = {"u/a": "u/a", "u/b": "u/a", "u/c": "u/a", "u/x": "u/x",
+            "u/y": "u/y", "u/z": "u/y"}
+    star, star_after = run("-1")
+    assert star == want
+    assert star_after > 1
+    for threshold in (None, "30"):
+        got, after = run(threshold)
+        assert got == want, threshold
+        assert after == 1, f"{after} jobs after the pairs' checkpoint at {threshold}"
+    got, after = run("29")
+    assert got == want
+    assert after > 1, "29 bytes < the pairs' 30: the star rounds must run"
+
+    p0 = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "d"), (None, None)], "u string, v string"
+    )
+    assert _driver_labels(p0, 3) is None
+    assert set(map(tuple, _driver_labels(p0, 4).collect())) == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), (None, None)
+    }
 
 
 def test_connected_components_fixed_point_accept_is_exact(spark):
@@ -1014,13 +1084,17 @@ def test_connected_components_fixed_point_accept_is_exact(spark):
 
     edges = [(1, x) for x in (2, 3, 4)] + [(10, 11)] + [(20, 20)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
-    again = spark.createDataFrame(
-        [(v, k) for k, v in got.items()], "id_a long, id_b long"
-    )
-    got2 = {r["id"]: r["component"] for r in connected_components(again).collect()}
-    assert got2 == got
+    for threshold in CC_THRESHOLDS:
+        with broadcast_threshold(spark, threshold):
+            got = {r["id"]: r["component"] for r in connected_components(df).collect()}
+            assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
+            again = spark.createDataFrame(
+                [(v, k) for k, v in got.items()], "id_a long, id_b long"
+            )
+            got2 = {
+                r["id"]: r["component"] for r in connected_components(again).collect()
+            }
+            assert got2 == got, threshold
 
 
 def test_hashed_shingle_sets_match_string_space(spark):
