@@ -326,7 +326,6 @@ def global_ranks(
     value_col: str,
     tiebreak: list[str] | None = None,
     rank_col: str = "_rank",
-    cuts: list[float] | None = None,
 ) -> tuple[DataFrame, int]:
     """Exact 0-based global ranks by ``(value_col, *tiebreak)`` without a
     single-task global sort. Returns ``(df + rank_col, total_count)``.
@@ -344,10 +343,8 @@ def global_ranks(
     tiebreak = list(tiebreak or [])
     p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
     # cuts only balance bucket sizes — 1% relative error is plenty and keeps
-    # the GK sketch cheap; callers with a KNOWN-uniform key (md5 shuffle
-    # keys) pass fixed cuts and skip this job entirely
-    if cuts is None:
-        cuts = df.stat.approxQuantile(value_col, [i / p for i in range(1, p)], 0.01)
+    # the GK sketch cheap
+    cuts = df.stat.approxQuantile(value_col, [i / p for i in range(1, p)], 0.01)
     cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
     parts = df.withColumn(
         "_b", F.size(F.filter(cuts_arr, lambda c: c <= F.col(value_col)))

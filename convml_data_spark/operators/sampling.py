@@ -31,8 +31,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .binning import global_ranks
-
 TWO_POW_52 = float(1 << 52)
 
 
@@ -61,10 +59,10 @@ def proportional_split(
     """R1: assign every row to a named collection, sizes proportional to
     ``counts`` (exact up to flooring, like the reference's allocation).
 
-    A deterministic "shuffle": rows are ranked by ``hash_uniform(id)``
-    (ties broken by id), then rank thresholds at ``floor(n · cum / total)``
-    (``cum`` the running sum of ``counts``) carve the collections.
-    Ranking uses :func:`global_ranks`, so no stage is a single-task sort.
+    The one-stratum case of :func:`stratified_split`: rows are ranked by
+    ``hash_uniform(id)`` (ties broken by id), then rank thresholds at
+    ``floor(n · cum / total)`` (``cum`` the running sum of ``counts``)
+    carve the collections.
 
     Adds ``collection_index`` (INT): the row's 0-based position inside
     its collection in shuffled order, ``_rank − lo`` where ``lo`` is the
@@ -72,36 +70,7 @@ def proportional_split(
     ``[lo, hi)``, so the index is dense over ``[0, hi − lo)`` at no extra
     cost — :func:`pick_scene_pairs` draws scenes by it.
     """
-    total = float(sum(counts.values()))
-    u = hash_uniform(seed, F.col(id_col))
-    keyed = df.withColumn("_u", u)
-    # _u is md5-uniform in [0,1) by construction — fixed equidistant cuts
-    # balance the rank buckets perfectly, no sketch job needed
-    p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    ranked, n = global_ranks(
-        keyed, "_u", tiebreak=[id_col], cuts=[i / p for i in range(1, p)]
-    )
-    rank = F.col("_rank")
-    assign = index = None
-    acc, lo = 0.0, 0
-    items = list(counts.items())
-    for name, c in items[:-1]:
-        acc += c
-        threshold = int(n * acc / total)
-        cond = rank < F.lit(threshold)
-        if assign is None:
-            assign, index = F.when(cond, F.lit(name)), F.when(cond, rank - lo)
-        else:
-            assign, index = assign.when(cond, F.lit(name)), index.when(cond, rank - lo)
-        lo = threshold
-    last = items[-1][0]
-    assign = F.lit(last) if assign is None else assign.otherwise(F.lit(last))
-    index = rank - lo if index is None else index.otherwise(rank - lo)
-    return (
-        ranked.withColumn(collection_col, assign)
-        .withColumn("collection_index", index.cast("int"))
-        .drop("_u", "_rank")
-    )
+    return _ranked_split(df, None, counts, id_col, seed, collection_col)
 
 
 def pick_scene_pairs(
@@ -272,9 +241,25 @@ def stratified_split(
     collection_col: str = "collection",
 ) -> DataFrame:
     """Stratified R1: EXACT proportional allocation within every group
-    (source / language / domain) — each group independently splits with
-    :func:`proportional_split` semantics (rank by md5 uniform, threshold
-    at ``floor(n_g · cum / total)``, multiplied before dividing).
+    (source / language / domain) — each group splits independently by
+    md5-uniform rank, thresholds at ``floor(n_g · cum / total)``
+    (multiplied before dividing). A null group is its own stratum.
+    """
+    return _ranked_split(df, group_col, counts, id_col, seed, collection_col)
+
+
+def _ranked_split(
+    df: DataFrame,
+    group_col: str | None,
+    counts: dict[str, int],
+    id_col: str,
+    seed: int,
+    collection_col: str,
+) -> DataFrame:
+    """The one R1 body: per stratum (``group_col``; ``None`` = one
+    stratum, which also gets ``collection_index``), rank rows by
+    ``(hash_uniform(seed, id), id)`` and cut the ranks at
+    ``floor(n · cum / total)``.
 
     Scale design: a per-group ``row_number`` window would funnel a whole
     group through one task (stratification keys are coarse — a source at
@@ -282,11 +267,11 @@ def stratified_split(
     equidistant bucket cuts (uniform by construction, no sketch), ranks
     are computed per (group, bucket) in parallel, and each bucket's
     offset + the group total arrive via a (group, bucket) count relation
-    — a window-over-aggregate bounded by |groups|·P rows,
-    computed entirely executor-side (NO driver collect: a per-domain
-    split over millions of strata would otherwise materialize millions
-    of rows on the driver). Assignment thresholds replay exactly in SQL
-    (same double multiply + floor both engines).
+    bounded by |groups|·P rows, computed entirely executor-side (NO
+    driver collect, so building the plan runs no job, and a per-domain
+    split over millions of strata materializes nothing on the driver).
+    Assignment thresholds replay exactly in SQL (same double multiply +
+    floor both engines).
     """
     from pyspark.sql import Window
 
@@ -298,27 +283,28 @@ def stratified_split(
     # plain equi-join on a nullable group column would silently DROP
     # null-group rows (null never equals null), while the window/oracle
     # semantics keep them as their own stratum
-    gk = F.coalesce(F.concat(F.lit("v"), F.col(group_col).cast("string")), F.lit("\x00"))
+    gk = F.lit("\x00")
+    if group_col is not None:
+        gk = F.coalesce(F.concat(F.lit("v"), F.col(group_col).cast("string")), gk)
     keyed = (
         df.withColumn("_u", u)
         .withColumn("_b", F.least(F.floor(F.col("_u") * p), F.lit(p - 1)).cast("int"))
         .withColumn("_gk", gk)
     )
     # offsets as a RELATION, never a driver collect: the (group, bucket)
-    # count aggregate stays executor-side and the running-sum window runs
-    # over at most P rows per group (the window partitions by group but
-    # its input is the |groups|·P-row aggregate, not the data) — a
-    # per-domain split over millions of web domains materializes nothing
-    # driver-side
+    # count aggregate stays executor-side, and each group folds its ≤ P
+    # bucket counts into one array to sum the buckets before each cell.
+    # No window orders the aggregate: with one stratum the group key is a
+    # literal, and a window over it would be keyless
     cells = keyed.groupBy("_gk", "_b").agg(F.count("*").alias("_c"))
-    w_off = Window.partitionBy("_gk").orderBy("_b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    off = cells.select(
-        "_gk",
-        "_b",
-        F.coalesce(F.sum("_c").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_c").over(Window.partitionBy("_gk")).alias("_n_g"),
+    strata = cells.groupBy("_gk").agg(F.collect_list(F.struct("_b", "_c")).alias("_cs"))
+
+    def total_of(cs: Column) -> Column:
+        return F.aggregate(cs, F.lit(0).cast("long"), lambda a, c: a + c["_c"])
+
+    before = F.filter("_cs", lambda c: c["_b"] < F.col("_b"))
+    off = strata.select("_gk", "_cs", F.inline("_cs")).select(
+        "_gk", "_b", total_of(before).alias("_off"), total_of(F.col("_cs")).alias("_n_g")
     )
     # NO broadcast hint: the ranking window below repartitions the data
     # by (_gk, _b) anyway, so a shuffle join on the same key REUSES that
@@ -331,17 +317,23 @@ def stratified_split(
     ranked = keyed.join(off, ["_gk", "_b"]).withColumn(
         "_rank", F.row_number().over(w) - 1 + F.col("_off")
     )
-    assign = None
-    acc = 0.0
+    rank = F.col("_rank")
+    assign = index = None
+    acc, lo = 0.0, F.lit(0)
     items = list(counts.items())
     for name, c in items[:-1]:
         acc += c
-        cond = F.col("_rank") < F.floor(F.col("_n_g") * F.lit(acc) / F.lit(total))
-        assign = (
-            F.when(cond, F.lit(name)) if assign is None else assign.when(cond, F.lit(name))
-        )
+        hi = F.floor(F.col("_n_g") * F.lit(acc) / F.lit(total))
+        cond = rank < hi
+        if assign is None:
+            assign, index = F.when(cond, F.lit(name)), F.when(cond, rank - lo)
+        else:
+            assign, index = assign.when(cond, F.lit(name)), index.when(cond, rank - lo)
+        lo = hi
     last = items[-1][0]
     assign = F.lit(last) if assign is None else assign.otherwise(F.lit(last))
-    return ranked.withColumn(collection_col, assign).drop(
-        "_u", "_b", "_gk", "_off", "_n_g", "_rank"
-    )
+    out = ranked.withColumn(collection_col, assign)
+    if group_col is None:
+        index = rank - lo if index is None else index.otherwise(rank - lo)
+        out = out.withColumn("collection_index", index.cast("int"))
+    return out.drop("_u", "_b", "_gk", "_off", "_n_g", "_rank")

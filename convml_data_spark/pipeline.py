@@ -154,6 +154,16 @@ class DatasetSpec:
         trajectory_tiles.py:40-43 / triplets sampling)."""
         return float(self.resolution) * int(self.tile_N)
 
+    @property
+    def grid_shape(self) -> tuple[int, int]:
+        """(nx, ny): the domain's pixel grid at ``resolution``. Rounded, not
+        truncated: an extent like 1.4 at 0.1 divides to 13.999…, which
+        must still be 14 pixels."""
+        return (
+            int(round((self.x_range[1] - self.x_range[0]) / self.resolution)),
+            int(round((self.y_range[1] - self.y_range[0]) / self.resolution)),
+        )
+
     @classmethod
     def from_dict(cls, d: dict) -> "DatasetSpec":
         scene = SceneSpec.from_dict(d)
@@ -175,8 +185,6 @@ class DatasetSpec:
             resolution=float(sampling["resolution"]),
             tiles_kind=d.get("tiles_kind", "triplets"),
             n_triplets={k: int(v) for k, v in n.items()},
-            # `or {}` on BOTH nested keys: a present-but-empty YAML key
-            # (`trajectories:`) loads as None, and None.get would raise
             # `or {}` on every nested key: a present-but-empty YAML key
             # (`trajectories:`) loads as None, and None.get would raise;
             # `rect-slidingwindow` is the reference's dashed spelling
@@ -317,8 +325,7 @@ def build_triplet_dataset(
             traj_time="t_traj",
         )
     elif spec.tiles_kind == "rect-slidingwindow":
-        nx = int((spec.x_range[1] - spec.x_range[0]) / spec.resolution)
-        ny = int((spec.y_range[1] - spec.y_range[0]) / spec.resolution)
+        nx, ny = spec.grid_shape
         grid = tiler.sliding_tiles(spark, nx, ny, spec.tile_N, spec.tile_N)
         # grid is TILE EXTENTS only (no scene dimension): (nx/tile_N)·
         # (ny/tile_N) rows — quadratically smaller than the raster (a
@@ -558,8 +565,7 @@ def build_regridded_scenes(
     """
     from .operators.grids import bilinear_regrid, nearest_regrid
 
-    nx = int(round((spec.x_range[1] - spec.x_range[0]) / spec.resolution))
-    ny = int(round((spec.y_range[1] - spec.y_range[0]) / spec.resolution))
+    nx, ny = spec.grid_shape
     scenes = build_scene_table(spark, spec.scene)
     if pixels is None:
         if src_dx is None or src_nx is None:
@@ -696,8 +702,7 @@ def build_scene_images(
     # lands exactly on 255
     byte = F.least(F.floor(scaled * F.lit(255.0)).cast("int"), F.lit(255))
     bytes_df = px.select("scene_id", "ix", "iy", byte.alias("byte"))
-    nx = int(round((spec.x_range[1] - spec.x_range[0]) / spec.resolution))
-    ny = int(round((spec.y_range[1] - spec.y_range[0]) / spec.resolution))
+    nx, ny = spec.grid_shape
     # complete the raster before packing: cells the regrid never emitted
     # (source hull short of the domain, bilinear edge stencils) become
     # byte 0, so every payload is exactly nx·ny bytes. The scene universe
@@ -781,8 +786,7 @@ def build_tile_data(
         # rect slices in INDEX space: the raster IS the domain pixel
         # grid — sized per AXIS (a non-square domain has nx != ny)
         src_dx = spec.resolution
-        src_nx = int(round((spec.x_range[1] - spec.x_range[0]) / spec.resolution))
-        src_ny = int(round((spec.y_range[1] - spec.y_range[0]) / spec.resolution))
+        src_nx, src_ny = spec.grid_shape
     if pixels is None:
         if src_dx is None or src_nx is None:
             raise ValueError("synthetic raster needs src_dx and src_nx")
@@ -795,12 +799,10 @@ def build_tile_data(
         # the rect tile set is the FULL sliding grid, which scales with
         # the raster — the covering-tile explode (zero joins, constant
         # fan-out) replaces the broadcast range join that would OOM the
-        # driver at 100× (grid dims must match build_triplet_dataset's)
-        gnx = int((spec.x_range[1] - spec.x_range[0]) / spec.resolution)
-        gny = int((spec.y_range[1] - spec.y_range[0]) / spec.resolution)
+        # driver at 100× (both take the grid from spec.grid_shape)
         tile_px = tiler.tile_pixel_cover(
             pixels.select("scene_id", "i", "j", "value"),
-            nx=gnx, ny=gny, n_tile=spec.tile_N, step=spec.tile_N,
+            *spec.grid_shape, n_tile=spec.tile_N, step=spec.tile_N,
             x_col="i",
             y_col="j",
         )
@@ -1037,7 +1039,7 @@ def build_rect_embeddings(
         "_uid",
         F.concat_ws("|", F.col("scene_id"), F.col("tile_id").cast("string")),
     )
-    ny = int(round((spec.y_range[1] - spec.y_range[0]) / spec.resolution))
+    ny = spec.grid_shape[1]
     placed = grids.attach_grid_coords(
         tiles.join(emb, "_uid"),
         x0=spec.x_range[0], dx=spec.resolution,
@@ -1126,8 +1128,7 @@ def build_analytics_pipeline(
         # rect slices in INDEX space — the aux raster is the same domain
         # pixel grid build_tile_data defaults to (sized per axis)
         aux_dx = spec.resolution
-        aux_nx = int(round((spec.x_range[1] - spec.x_range[0]) / spec.resolution))
-        aux_ny = int(round((spec.y_range[1] - spec.y_range[0]) / spec.resolution))
+        aux_nx, aux_ny = spec.grid_shape
     aux_px = synthetic_scene_raster(
         d["scenes"], nx=aux_nx, ny=aux_ny, dx=aux_dx, dy=aux_dx,
         x0=spec.x_range[0], y0=spec.y_range[0], coeffs=AUX_RASTER_COEFFS,
@@ -1137,9 +1138,7 @@ def build_analytics_pipeline(
         # the tile grid scales with the raster, so no broadcast of it
         aux_tile_px = tiler.tile_pixel_cover(
             aux_px.select("scene_id", "i", "j", "value"),
-            nx=int((spec.x_range[1] - spec.x_range[0]) / spec.resolution),
-            ny=int((spec.y_range[1] - spec.y_range[0]) / spec.resolution),
-            n_tile=spec.tile_N, step=spec.tile_N,
+            *spec.grid_shape, n_tile=spec.tile_N, step=spec.tile_N,
             x_col="i",
             y_col="j",
         )

@@ -503,6 +503,57 @@ def test_build_rect_tile_data_non_square_domain(spark):
     assert all(r["n_px"] == 16 and r["shape_ok"] for r in rows)
 
 
+def test_build_rect_tile_data_rounds_the_pixel_grid(spark):
+    """The domain's pixel grid is rounded, never truncated: 1.4 / 0.1 is
+    13.999… in doubles, and truncating it to 13 pixels dropped every tile
+    but the first per scene; 0.7 / 0.1 truncated to 6 pixels left no
+    whole tile at all (an illegal ``sequence(0, -1, 7)``)."""
+    for extent, tiles_per_scene in ((0.7, 1), (1.4, 4)):
+        spec = pipeline.DatasetSpec.from_dict(
+            {
+                "source": "rnd",
+                "inputs": ["vis"],
+                "t_start": "2024-01-01T00:00:00",
+                "t_end": "2024-01-01T02:00:00",
+                "step": "1 hour",
+                "tiles_kind": "rect-slidingwindow",
+                "sampling": {"resolution": 0.1, "rect-slidingwindow": {"tile_N": 7}},
+                "domain": {"l_zonal": extent, "l_meridional": extent},
+            }
+        )
+        rows = pipeline.build_tile_data(spark, spec)["tile_data"].collect()
+        assert len(rows) == 2 * tiles_per_scene, extent
+        assert all(r["n_px"] == 49 and r["shape_ok"] for r in rows), extent
+
+
+def test_build_tile_data_construction_runs_no_jobs(spark):
+    """Building the triplet tile plan is lazy end to end: the R1 split's
+    rank offsets are a relation in the plan, not a driver collect, so no
+    job runs until a sink does. Only the triplets path is pinned: the
+    trajectories path still ranks eagerly through
+    ``binning.global_ranks_with_gap_stats``."""
+    spec = pipeline.DatasetSpec.from_dict(
+        {
+            **TILE_SPEC,
+            "sampling": {
+                "resolution": 24.0,
+                "triplets": {"N_triplets": {"train": 3, "study": 1}, "tile_N": 4},
+            },
+        }
+    )
+    sc = spark.sparkContext
+    group = "tile-construction-jobcount"
+    sc.setJobGroup(group, "tile plan construction job-count gate")
+    try:
+        d = pipeline.build_tile_data(spark, spec, src_dx=25.0, src_nx=80)
+    finally:
+        sc.setJobGroup("", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 0, f"building the tile plan ran {len(jobs)} jobs"
+    rows = d["tile_data"].collect()
+    assert len(rows) == 12 and all(r["shape_ok"] for r in rows)
+
+
 def test_compact_to_target_files(spark, tmp_path):
     """Compaction collapses a file-per-task crumb layout into ~target-size
     files with identical data, atomically (no mixed state left behind)."""
