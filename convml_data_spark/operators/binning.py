@@ -20,8 +20,9 @@ is acceptable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 
 def _bucket(col: Column, lo: float, step: float) -> Column:
@@ -156,15 +157,109 @@ def binned_statistic_2d(
     return out
 
 
+def _cut_bucket(value: Column, cuts: list[float]) -> Column:
+    """Bucket id of ``value`` under the ascending literal ``cuts``: the
+    number of cuts ≤ it. A data expression, never
+    ``spark_partition_id()``, which AQE may re-plan between jobs. Equal
+    values share a bucket; NULL lands in bucket 0 (NULLS FIRST).
+
+    ``value`` rides in the fold's accumulator, not in the lambda: join
+    filter inference rewrites a HOF lambda's OUTER column onto the other
+    side of the offsets join (``size(filter(cuts, c -> c <= v))`` fails
+    with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND), and planning a sum of P
+    ``when`` terms took 2.8 s at P = 200 and over 9 min at P = 400."""
+    start = F.struct(value.cast("double").alias("v"), F.lit(0).alias("n"))
+    return F.aggregate(
+        F.array(*[F.lit(float(c)) for c in cuts]),
+        start,
+        lambda acc, c: F.struct(
+            acc["v"].alias("v"), (acc["n"] + F.when(c <= acc["v"], 1).otherwise(0)).alias("n")
+        ),
+        lambda acc: acc["n"],
+    )
+
+
+def _stratum_key(group_col: str | None) -> Column:
+    """Null-safe string image ``_gk`` of a stratum column (``None``: one
+    stratum, a literal). An equi-join on the raw nullable column would
+    DROP the null group, which windows and aggregates keep."""
+    gk = F.lit("\x00")
+    if group_col is not None:
+        gk = F.coalesce(F.concat(F.lit("v"), F.col(group_col).cast("string")), gk)
+    return gk
+
+
+def _bucket_offsets(keyed: DataFrame, measure: Column) -> DataFrame:
+    """The offsets relation ``(_gk, _b, _off, _n)`` of rows keyed by a
+    stratum image ``_gk`` (:func:`_stratum_key`) and a bucket ``_b``.
+    ``measure`` aggregates a cell: ``count("*")`` for ranks, the ``sum``
+    of a non-NULL long for running sums; ``_off`` is it over the
+    stratum's LOWER buckets, ``_n`` over the whole stratum.
+
+    |strata|·P rows, executor-side: building a plan on it runs no job.
+    Each stratum folds its ≤ P cells into one array — no window, which
+    would be keyless when ``_gk`` is a literal.
+    """
+    cells = keyed.groupBy("_gk", "_b").agg(measure.alias("_c"))
+    strata = cells.groupBy("_gk").agg(F.collect_list(F.struct("_b", "_c")).alias("_cs"))
+
+    def total_of(cs: Column) -> Column:
+        return F.aggregate(cs, F.lit(0).cast("long"), lambda a, c: a + c["_c"])
+
+    before = F.filter("_cs", lambda c: c["_b"] < F.col("_b"))
+    return strata.select("_gk", "_cs", F.inline("_cs")).select(
+        "_gk", "_b", total_of(before).alias("_off"), total_of(F.col("_cs")).alias("_n")
+    )
+
+
+def _buckets(
+    df: DataFrame,
+    order_col: str,
+    tiebreak: list[str] | None = None,
+    cuts: list[float] | None = None,
+) -> tuple[DataFrame, WindowSpec]:
+    """``df`` + bucket ``_b`` of ``order_col`` under literal ``cuts``, and
+    the per-bucket window in ``(order_col, *tiebreak)`` order.
+    ``cuts=None`` sketches them (one job); cuts only balance buckets, so
+    1% relative error is plenty."""
+    if cuts is None:
+        p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
+        cuts = df.stat.approxQuantile(order_col, [i / p for i in range(1, p)], 0.01)
+    parts = df.withColumn("_b", _cut_bucket(F.col(order_col), cuts))
+    return parts, Window.partitionBy("_b").orderBy(order_col, *(tiebreak or []))
+
+
+def _with_offsets(parts: DataFrame, measure: Column) -> DataFrame:
+    """One-stratum ``parts`` + ``_off`` and ``_n``, broadcast-joined: the
+    relation has ≤ P rows behind an aggregate Catalyst cannot size."""
+    keyed = parts.withColumn("_gk", _stratum_key(None))
+    off = _bucket_offsets(keyed, measure)
+    return keyed.join(F.broadcast(off), ["_gk", "_b"]).drop("_gk")
+
+
+def _ranked(parts: DataFrame, w: WindowSpec, rank_col: str) -> DataFrame:
+    """``parts`` + exact 0-based global ``rank_col`` + row count ``_n``."""
+    # SCALE BOUND: row_number() is IntegerType, so each BUCKET must stay
+    # below 2^31 rows. Cut counts scale with parallelism, so this holds
+    # whenever n / |cuts| < 2^31 — at 10^12 rows provision >= ~500 cuts
+    # (the global rank add itself widens via the long offset)
+    return (
+        _with_offsets(parts, F.count("*"))
+        .withColumn(rank_col, F.row_number().over(w) - 1 + F.col("_off"))
+        .drop("_b", "_off")
+    )
+
+
 def ecdf_global(df: DataFrame, value_col: str) -> DataFrame:
     """A6 without partition keys, at scale: (# rows ≤ v) / N per distinct
     value via :func:`global_ranks` — identical to ``cume_dist() OVER
     (ORDER BY v)`` but with no single-partition window anywhere. Equal
     values always land in one rank bucket (bucket ids are `<=`-cut
-    expressions), so ``max(rank)+1`` per value IS the ≤-count."""
-    ranked, n = global_ranks(df, value_col)
+    expressions), so ``max(rank)+1`` per value IS the ≤-count; N is the
+    offsets relation's ``_n``."""
+    ranked = _ranked(*_buckets(df, value_col), "_rank")
     cume = ranked.groupBy(value_col).agg(
-        ((F.max("_rank") + 1) / F.lit(float(n))).alias("ecdf")
+        ((F.max("_rank") + 1) / F.max("_n")).alias("ecdf")
     )
     # null-safe join: NULL values are their own ≤-group (ranked first,
     # exactly cume_dist's NULLS FIRST semantics — max(rank)+1 over the
@@ -184,8 +279,6 @@ def ecdf(df: DataFrame, value_col: str, partition_by: list[str] | None = None) -
     :func:`ecdf_global` (same values: cume_dist(v) = (# rows ≤ v)/N), with
     the original column order preserved. Keyed calls window in parallel.
     """
-    from pyspark.sql import Window
-
     if not partition_by:
         return ecdf_global(df, value_col).select(*df.columns, "ecdf")
     w = Window.partitionBy(*partition_by).orderBy(value_col)
@@ -197,60 +290,39 @@ def global_ranks_with_gap_stats(
     value_col: str,
     tiebreak: list[str] | None = None,
     rank_col: str = "_rank",
-) -> tuple[DataFrame, int, tuple[int, int, int, int] | None]:
+) -> tuple[DataFrame, tuple[int, int, int, int] | None]:
     """:func:`global_ranks` that ALSO returns the value axis's gap stats
-    ``(min, max, max_gap, p99_gap)`` from the SAME plan-time pass.
+    ``(min, max, max_gap, p99_gap)``, from one plan-time summary job.
 
     For time axes feeding :func:`operators.asof.asof_join`'s no-tolerance
     path: the rank decomposition already buckets + per-bucket-sorts the
-    values, so consecutive-gap statistics fall out of one combined
+    values, so consecutive-gap statistics fall out of one per-bucket
     aggregate instead of asof's two extra ``_right_gap_stats`` jobs.
     Boundary gaps between buckets are reconstructed driver-side from the
     P bucket (min, max) scalars; the p99 start radius is approximated as
     the max of per-bucket p99 sketches (any value ≤ max_gap only shifts
     where asof's pass ladder starts — exactness rides on max_gap alone,
-    which IS exact here). Stats are None when the input is empty.
+    which IS exact here). The ranks themselves come from the offsets
+    relation, as in :func:`global_ranks`. Stats are None when the input
+    is empty.
     """
-    from pyspark.sql import Window
-
-    tiebreak = list(tiebreak or [])
-    p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    cuts = df.stat.approxQuantile(value_col, [i / p for i in range(1, p)], 0.01)
-    cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
-    parts = df.withColumn(
-        "_b", F.size(F.filter(cuts_arr, lambda c: c <= F.col(value_col)))
-    )
-    w_in = Window.partitionBy("_b").orderBy(value_col, *tiebreak)
-    local = parts.withColumn(
-        "_g", F.col(value_col) - F.lag(value_col).over(w_in)
-    )
+    parts, w = _buckets(df, value_col, tiebreak)
+    v = F.col(value_col)
     summary = (
-        local.groupBy("_b")
+        parts.withColumn("_g", v - F.lag(v).over(w))
+        .groupBy("_b")
         .agg(
-            F.count("*").alias("cnt"),
-            F.min(value_col).alias("mn"),
-            F.max(value_col).alias("mx"),
+            F.min(v).alias("mn"),
+            F.max(v).alias("mx"),
             F.max("_g").alias("maxg"),
             F.percentile_approx("_g", 0.99, 1000).alias("p99"),
         )
         .collect()
     )
+    ranked = _ranked(parts, w, rank_col).drop("_n")
     rows = sorted(summary, key=lambda r: r["_b"])
-    n = sum(r["cnt"] for r in rows)
-    if n == 0:
-        empty = parts.withColumn(rank_col, F.lit(0)).drop("_b").limit(0)
-        return empty, 0, None
-    offsets, acc = {}, 0
-    for r in rows:
-        offsets[r["_b"]] = acc
-        acc += r["cnt"]
-    off_expr = F.element_at(
-        F.create_map(*[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]),
-        F.col("_b"),
-    )
-    ranked = parts.withColumn(
-        rank_col, F.row_number().over(w_in) - 1 + off_expr
-    ).drop("_b")
+    if not rows:
+        return ranked, None
     boundary = [
         int(rows[i]["mn"]) - int(rows[i - 1]["mx"]) for i in range(1, len(rows))
     ]
@@ -259,7 +331,7 @@ def global_ranks_with_gap_stats(
     p99s = [int(r["p99"]) for r in rows if r["p99"] is not None]
     p99 = min(max(p99s) if p99s else gap, gap) if gap else 0
     stats = (int(rows[0]["mn"]), int(rows[-1]["mx"]), int(gap), int(p99))
-    return ranked, n, stats
+    return ranked, stats
 
 
 def global_cumsum(
@@ -274,51 +346,29 @@ def global_cumsum(
     """Exact global running sum of ``value_col`` in ``(order_col,
     *tiebreak)`` order without a single-task global window.
 
-    Same decomposition as :func:`global_ranks`: sketch-derived literal cut
-    points bucket the rows (data expression, never
-    ``spark_partition_id``), per-bucket window cumsums run in parallel,
-    and one tiny aggregate gives each bucket's global offset (P scalars on
-    the driver). ``inclusive=False`` returns the sum of all STRICTLY
-    preceding rows (the "offset before me" form sequence packing needs).
-    Pass explicit ``cuts`` when the order key's distribution is KNOWN
-    (e.g. an md5-uniform shuffle key — fixed equidistant cuts balance
-    perfectly) to skip the sketch job; cuts only balance buckets, never
-    affect values.
+    Same decomposition as :func:`global_ranks`, with the bucket SUMS as
+    the offsets measure: per-bucket window cumsums run in parallel and
+    each bucket adds its offset from the relation. ``inclusive=False``
+    returns the sum of all STRICTLY preceding rows (the "offset before
+    me" form sequence packing needs). Pass explicit ``cuts`` when the
+    order key's distribution is KNOWN (e.g. an md5-uniform shuffle key —
+    fixed equidistant cuts balance perfectly): building the plan then
+    runs no job at all.
     """
-    from pyspark.sql import Window
-
-    tiebreak = list(tiebreak or [])
-    p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    if cuts is None:
-        cuts = df.stat.approxQuantile(order_col, [i / p for i in range(1, p)], 0.01)
-    cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
-    parts = df.withColumn(
-        "_b", F.size(F.filter(cuts_arr, lambda c: c <= F.col(order_col)))
-    )
+    parts, w = _buckets(df, order_col, tiebreak, cuts)
     # NULL values count as 0 everywhere (sum() would skip them but the
     # exclusive form's `local − value` would go NULL and poison the row)
     val = F.coalesce(F.col(value_col).cast("long"), F.lit(0).cast("long"))
-    sums = {
-        r["_b"]: r["s"]
-        for r in parts.groupBy("_b").agg(F.sum(val).alias("s")).collect()
-    }
-    offsets, acc = {}, 0
-    for b in sorted(sums):
-        offsets[b] = acc
-        acc += sums[b] or 0
-    if not offsets:
-        return parts.withColumn(out_col, F.lit(0).cast("long")).drop("_b").limit(0)
-    off_expr = F.element_at(
-        F.create_map(*[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]),
-        F.col("_b"),
-    )
-    w = Window.partitionBy("_b").orderBy(order_col, *tiebreak)
     local = F.sum(val).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     if not inclusive:
         local = local - val
-    return parts.withColumn(out_col, (local + off_expr).cast("long")).drop("_b")
+    return (
+        _with_offsets(parts, F.sum(val))
+        .withColumn(out_col, (local + F.col("_off")).cast("long"))
+        .drop("_b", "_off", "_n")
+    )
 
 
 def global_ranks(
@@ -326,51 +376,16 @@ def global_ranks(
     value_col: str,
     tiebreak: list[str] | None = None,
     rank_col: str = "_rank",
-) -> tuple[DataFrame, int]:
+) -> DataFrame:
     """Exact 0-based global ranks by ``(value_col, *tiebreak)`` without a
-    single-task global sort. Returns ``(df + rank_col, total_count)``.
+    single-task global sort. Returns ``df`` + ``rank_col``.
 
-    Design: approximate cut points (one sketch pass) become LITERAL bucket
-    boundaries; rows get an expression-computed bucket id; per-bucket
-    ``row_number`` windows run in parallel; bucket counts (one tiny agg)
-    give each bucket's global offset. Bucket ids MUST be data expressions,
-    never ``spark_partition_id()``: physical partition ids are not stable
-    across the two jobs (AQE may re-plan a repartition between actions),
-    which would silently shift every rank.
+    Design: approximate cut points (one sketch job, the only job building
+    the plan runs) become LITERAL bucket boundaries (:func:`_cut_bucket`);
+    per-bucket ``row_number`` windows run in parallel and add each
+    bucket's offset from :func:`_bucket_offsets`.
     """
-    from pyspark.sql import Window
-
-    tiebreak = list(tiebreak or [])
-    p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    # cuts only balance bucket sizes — 1% relative error is plenty and keeps
-    # the GK sketch cheap
-    cuts = df.stat.approxQuantile(value_col, [i / p for i in range(1, p)], 0.01)
-    cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
-    parts = df.withColumn(
-        "_b", F.size(F.filter(cuts_arr, lambda c: c <= F.col(value_col)))
-    )
-    counts = {
-        r["_b"]: r["cnt"]
-        for r in parts.groupBy("_b").agg(F.count("*").alias("cnt")).collect()
-    }
-    n = sum(counts.values())
-    offsets, acc = {}, 0
-    for b in sorted(counts):
-        offsets[b] = acc
-        acc += counts[b]
-    if not offsets:
-        return parts.withColumn(rank_col, F.lit(0)).drop("_b").limit(0), 0
-    off_expr = F.element_at(
-        F.create_map(*[x for b, o in offsets.items() for x in (F.lit(b), F.lit(o))]),
-        F.col("_b"),
-    )
-    # SCALE BOUND: row_number() is IntegerType, so each BUCKET must stay
-    # below 2^31 rows. Cut counts scale with parallelism, so this holds
-    # whenever n / |cuts| < 2^31 — at 10^12 rows provision >= ~500 cuts
-    # (the global rank add itself widens via the offset literal's type)
-    w = Window.partitionBy("_b").orderBy(value_col, *tiebreak)
-    ranked = parts.withColumn(rank_col, F.row_number().over(w) - 1 + off_expr).drop("_b")
-    return ranked, n
+    return _ranked(*_buckets(df, value_col, tiebreak), rank_col).drop("_n")
 
 
 def _boundary_rows(parts: DataFrame, need: dict[int, list[int]]) -> DataFrame:
@@ -381,8 +396,6 @@ def _boundary_rows(parts: DataFrame, need: dict[int, list[int]]) -> DataFrame:
     targeted bucket in one task, which is fine because buckets are sized
     ~N/parallelism by the approx cut points.
     """
-    from pyspark.sql import Window
-
     # the wanted (bucket, local-rank) pairs pack into one long each, so the
     # post-window filter is a single codegen `In` on ≤2·|qs| literals instead
     # of a per-row map lookup + array scan
@@ -404,15 +417,16 @@ def exact_quantiles(df: DataFrame, value_col: str, qs: list[float]) -> list[floa
     Spark's built-in exact ``percentile`` builds a value→count map per
     partition and merges it in ONE final task — a driver-sized digest that
     dies at 100 TB. This instead: literal approximate cut points define
-    balanced buckets (expression-assigned, AQE-safe); one tiny agg counts
-    each bucket; target ranks resolve to (bucket, local index); only the
+    balanced buckets (expression-assigned, AQE-safe); the ≤ P-row offsets
+    relation (:func:`_bucket_offsets`) is collected, because the answer is
+    driver-side scalars; target ranks resolve to (bucket, local index); only the
     targeted buckets are sorted (per-bucket, in parallel) and the ≤2·|qs|
     boundary values interpolate driver-side.
     """
     import bisect
 
     vals = df.select(F.col(value_col).alias("v")).where(F.col("v").isNotNull())
-    # three actions share this relation (cut-point sketch, bucket counts,
+    # three actions share this relation (cut-point sketch, bucket offsets,
     # boundary fetch) — persist so the source is scanned once, not 3×
     vals = vals.persist()
     try:
@@ -429,21 +443,14 @@ def exact_quantiles(df: DataFrame, value_col: str, qs: list[float]) -> list[floa
             ).alias("c")
         ).first()
         cuts = [float(c) for c in (row["c"] or [])]
-        cuts_arr = F.array(*[F.lit(float(c)) for c in cuts])
-        parts = vals.withColumn(
-            "_b", F.size(F.filter(cuts_arr, lambda c: c <= F.col("v")))
-        )
-        counts = {
-            r["_b"]: r["cnt"]
-            for r in parts.groupBy("_b").agg(F.count("*").alias("cnt")).collect()
-        }
-        n = sum(counts.values())
-        if n == 0:
+        parts = vals.withColumn("_b", _cut_bucket(F.col("v"), cuts))
+        offs = _bucket_offsets(
+            parts.withColumn("_gk", _stratum_key(None)), F.count("*")
+        ).collect()
+        if not offs:
             return [float("nan")] * len(qs)
-        offsets, acc = {}, 0
-        for b in sorted(counts):
-            offsets[b] = acc
-            acc += counts[b]
+        n = offs[0]["_n"]
+        offsets = {r["_b"]: r["_off"] for r in offs}
         targets = set()
         positions = []
         for q in qs:

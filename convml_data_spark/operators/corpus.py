@@ -961,8 +961,9 @@ def pack_token_chunks(
     Scale design: the deterministic shuffle key is an md5 of the id
     (replayable anywhere, partitioning-independent) and the global running
     token count is :func:`binning.global_cumsum` — bucket-decomposed, so
-    no single-task window ever sees the corpus. One sketch pass + one tiny
-    aggregate + one partitioned window: 100 TB packs in 3 bounded jobs.
+    no single-task window ever sees the corpus. The md5 key takes fixed
+    cuts, so building the plan runs no job: the bucket sums and the
+    per-bucket window both run inside the sink's query.
     """
     from .binning import global_cumsum
     from .dedup import _spread
@@ -1212,10 +1213,10 @@ def select_to_token_budget(
     sample-derived quality cut points split each group into ~P buckets
     (equal qualities always share a bucket, so the id tiebreak never
     crosses a boundary), per-(group, bucket) window cumsums run in
-    parallel, and each bucket's group-local offset comes from a tiny
-    aggregate relation (|groups|·P rows) that is broadcast back — no
-    unbounded driver collect, one shuffle for the agg and one for the
-    windows. Token counts are assumed ≥ 0; NULL tokens count as 0.
+    parallel, and each bucket's group-local offset comes from the
+    offsets relation of :func:`~.binning._bucket_offsets` (|groups|·P
+    rows, executor-side), broadcast back. Token counts are assumed ≥ 0;
+    NULL tokens count as 0.
 
     Cut estimation is a CONSTRUCTION-TIME job, deliberately bounded the
     same way as the ANN fit sample (similarity.py's 65,536-row cap): a
@@ -1227,6 +1228,8 @@ def select_to_token_budget(
     assignment is monotone in quality and ties share a bucket), so
     sample error can skew bucket sizes but never change the answer.
     """
+    from .binning import _bucket_offsets, _cut_bucket, _stratum_key
+
     spark = df.sparkSession
     P = max(spark.sparkContext.defaultParallelism, 2)
     qvals = [
@@ -1242,48 +1245,27 @@ def select_to_token_budget(
         [qvals[(i * len(qvals)) // P] for i in range(1, P)] if qvals else []
     )
     q = F.col(quality_col)
-    # bucket 0 = highest quality; plain sum-of-when, not a HOF lambda
-    # (an outer numeric column compared inside a filter() lambda hits a
-    # Catalyst INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND in this plan shape)
-    bexpr = F.lit(0)
-    for c in cuts:
-        bexpr = bexpr + F.when(q < F.lit(float(c)), 1).otherwise(0)
-    bexpr = F.when(q.isNull(), F.lit(len(cuts) + 1)).otherwise(bexpr)
+    # bucket 0 = highest quality: the number of cuts above q
+    bexpr = F.when(q.isNull(), F.lit(len(cuts) + 1)).otherwise(
+        F.lit(len(cuts)) - _cut_bucket(q, cuts)
+    )
     val = F.coalesce(F.col(token_col).cast("long"), F.lit(0).cast("long"))
-    parts = df.withColumn("_b", bexpr).withColumn("_tok", val)
-    offsets = (
-        parts.groupBy(group_col, "_b")
-        .agg(F.sum("_tok").alias("_s"))
-        .withColumn(
-            "_off",
-            F.coalesce(
-                F.sum("_s").over(
-                    Window.partitionBy(group_col)
-                    .orderBy("_b")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0).cast("long"),
-            ),
-        )
-        .select(group_col, "_b", "_off")
+    parts = (
+        df.withColumn("_b", bexpr)
+        .withColumn("_tok", val)
+        .withColumn("_gk", _stratum_key(group_col))
     )
     w = (
         Window.partitionBy(group_col, "_b")
         .orderBy(q.desc_nulls_last(), F.col(id_col).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # NULL group keys form their own group (the window/groupBy already
-    # treat them so) — the join-back must be null-safe on the group key or
-    # those rows silently vanish from the output
-    offs = offsets.withColumnRenamed(group_col, "_g").withColumnRenamed("_b", "_ob")
     out = (
         parts.withColumn("_local", F.sum("_tok").over(w))
-        # offsets is bounded by construction (|groups|·(P+2) rows) but sits
-        # behind an agg+window plan Catalyst has no stats for — broadcast
-        .join(
-            F.broadcast(offs),
-            F.col(group_col).eqNullSafe(F.col("_g")) & (F.col("_b") == F.col("_ob")),
-        )
+        # the offsets relation is bounded by construction (|groups|·(P+2)
+        # rows) but sits behind an aggregate plan Catalyst has no stats
+        # for — broadcast. Its null-safe _gk keeps NULL-group rows
+        .join(F.broadcast(_bucket_offsets(parts, F.sum("_tok"))), ["_gk", "_b"])
         .where(F.col("_off") + F.col("_local") <= F.lit(int(budget)))
     )
     return out.select(*df.columns)

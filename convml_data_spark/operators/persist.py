@@ -39,9 +39,13 @@ def materialize_for_reuse(
     checkpoint dir — raises with instructions if none is set, rather than
     letting Spark fail deep inside the job).
 
-    ``eager=False`` everywhere by default: an eager checkpoint executes
-    the upstream plan at DataFrame-CONSTRUCTION time, so building a query
-    for ``explain()`` would run the job (see the verify notes).
+    ``eager=False`` by default, but it is only partly lazy. An eager
+    checkpoint runs the whole upstream plan when this is called. A lazy
+    one still runs jobs at the call: building the checkpoint RDD
+    prepares the physical plan, which starts every broadcast build side
+    and, under AQE, shuffle stages upstream of them; the rest waits for
+    the first action. ``spec_curation_pipeline`` at sf0.01 on local[2]:
+    its nine lazy calls ran 22 jobs (15 with AQE off), its sink 8.
     """
     if durable is None:
         durable = os.environ.get(ENV_FLAG, "") == "1"

@@ -266,8 +266,9 @@ def _ranked_split(
     100 TB is terabytes). Instead the md5-uniform rank key gets FIXED
     equidistant bucket cuts (uniform by construction, no sketch), ranks
     are computed per (group, bucket) in parallel, and each bucket's
-    offset + the group total arrive via a (group, bucket) count relation
-    bounded by |groups|·P rows, computed entirely executor-side (NO
+    offset + the group total arrive via the (group, bucket) count
+    relation of :func:`binning._bucket_offsets`, bounded by |groups|·P
+    rows and computed entirely executor-side (NO
     driver collect, so building the plan runs no job, and a per-domain
     split over millions of strata materializes nothing on the driver).
     Assignment thresholds replay exactly in SQL (same double multiply +
@@ -275,37 +276,16 @@ def _ranked_split(
     """
     from pyspark.sql import Window
 
-    spark = df.sparkSession
-    p = max(spark.sparkContext.defaultParallelism, 2)
+    from .binning import _bucket_offsets, _stratum_key
+
+    p = max(df.sparkSession.sparkContext.defaultParallelism, 2)
     total = float(sum(counts.values()))
-    u = hash_uniform(seed, F.col(id_col))
-    # _gk: null-safe string image of the group for the offsets join — a
-    # plain equi-join on a nullable group column would silently DROP
-    # null-group rows (null never equals null), while the window/oracle
-    # semantics keep them as their own stratum
-    gk = F.lit("\x00")
-    if group_col is not None:
-        gk = F.coalesce(F.concat(F.lit("v"), F.col(group_col).cast("string")), gk)
     keyed = (
-        df.withColumn("_u", u)
+        df.withColumn("_u", hash_uniform(seed, F.col(id_col)))
         .withColumn("_b", F.least(F.floor(F.col("_u") * p), F.lit(p - 1)).cast("int"))
-        .withColumn("_gk", gk)
+        .withColumn("_gk", _stratum_key(group_col))
     )
-    # offsets as a RELATION, never a driver collect: the (group, bucket)
-    # count aggregate stays executor-side, and each group folds its ≤ P
-    # bucket counts into one array to sum the buckets before each cell.
-    # No window orders the aggregate: with one stratum the group key is a
-    # literal, and a window over it would be keyless
-    cells = keyed.groupBy("_gk", "_b").agg(F.count("*").alias("_c"))
-    strata = cells.groupBy("_gk").agg(F.collect_list(F.struct("_b", "_c")).alias("_cs"))
-
-    def total_of(cs: Column) -> Column:
-        return F.aggregate(cs, F.lit(0).cast("long"), lambda a, c: a + c["_c"])
-
-    before = F.filter("_cs", lambda c: c["_b"] < F.col("_b"))
-    off = strata.select("_gk", "_cs", F.inline("_cs")).select(
-        "_gk", "_b", total_of(before).alias("_off"), total_of(F.col("_cs")).alias("_n_g")
-    )
+    off = _bucket_offsets(keyed, F.count("*"))
     # NO broadcast hint: the ranking window below repartitions the data
     # by (_gk, _b) anyway, so a shuffle join on the same key REUSES that
     # exchange (one data shuffle total, same as the broadcast plan) —
@@ -323,7 +303,7 @@ def _ranked_split(
     items = list(counts.items())
     for name, c in items[:-1]:
         acc += c
-        hi = F.floor(F.col("_n_g") * F.lit(acc) / F.lit(total))
+        hi = F.floor(F.col("_n") * F.lit(acc) / F.lit(total))
         cond = rank < hi
         if assign is None:
             assign, index = F.when(cond, F.lit(name)), F.when(cond, rank - lo)
@@ -336,4 +316,4 @@ def _ranked_split(
     if group_col is None:
         index = rank - lo if index is None else index.otherwise(rank - lo)
         out = out.withColumn("collection_index", index.cast("int"))
-    return out.drop("_u", "_b", "_gk", "_off", "_n_g", "_rank")
+    return out.drop("_u", "_b", "_gk", "_off", "_n", "_rank")

@@ -70,8 +70,9 @@ def trajectory_tile_locations(
     Spark composition — F4 snap + A6-style global ranks, no driver loops:
 
     - ``time_idx`` is an exact global rank over the distinct trajectory
-      times via :func:`binning.global_ranks` (bucket-decomposed — never a
-      keyless ``row_number`` window);
+      times via :func:`binning.global_ranks_with_gap_stats`
+      (bucket-decomposed — never a keyless ``row_number`` window), which
+      also returns the time axis's gap statistics;
     - the nearest-time match is :func:`asof.asof_join` with no tolerance
       (ties → earlier trajectory time, the reference's argmin rule), which
       self-buckets off the trajectory's gap statistics, so a 100 TB scene
@@ -91,13 +92,13 @@ def trajectory_tile_locations(
         "_tus", epoch_micros(traj_time, dict(traj.dtypes)[traj_time])
     ).persist()
     # persist the deduped trajectory BEFORE ranking: the combined pass
-    # below runs two plan-time jobs (cut-point sketch + summary) and the
-    # rank window is a third consumer — without this each re-executes the
-    # upstream distinct. Bounded by the flight track, not the scene table.
-    # The combined pass ALSO yields the time axis's gap stats, so the
-    # as-of join below runs ZERO extra plan-time jobs (it used to spend
-    # two more inferring its bucket radius from the same relation).
-    ranked, _n, stats = global_ranks_with_gap_stats(
+    # below runs two plan-time jobs (cut-point sketch + gap summary), and
+    # the rank window and its offsets relation consume it again — without
+    # this each re-executes the upstream distinct. Bounded by the flight
+    # track, not the scene table. The gap stats let the as-of join below
+    # run ZERO extra plan-time jobs (it used to spend two more inferring
+    # its bucket radius from the same relation).
+    ranked, stats = global_ranks_with_gap_stats(
         traj, "_tus", rank_col="time_idx"
     )
     ranked = ranked.select(

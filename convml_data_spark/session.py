@@ -49,7 +49,7 @@ _GENERATE_FILTER_RULE = (
 
 
 def exclude_generate_filter_inference(spark: SparkSession) -> None:
-    """SESSION INVARIANT (same contract as ``tables.enable_nanos_compat``):
+    """SESSION INVARIANT (same contract as ``tables.read_parquet``):
     exclude ``InferFiltersFromGenerate`` for the rest of the session, keeping
     any other excluded rules the caller configured. Safe to call repeatedly;
     routed through every explode-heavy operator entry point."""

@@ -77,9 +77,8 @@ def stream_table(
     from convml_data_spark import tables
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    # shared session-invariant conf handling — see tables.enable_nanos_compat
-    ns_cols = tables.enable_nanos_compat(spark, path)
-    batch = spark.read.parquet(path)
+    # shared session-invariant conf handling — see tables.read_parquet
+    batch, ns_cols = tables.read_parquet(spark, path)
     if single_batch:
         # Pin one-micro-batch drain semantics: operators whose output
         # contract depends on seeing the whole backlog at once (e.g. the

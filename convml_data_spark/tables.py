@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLE_NAMES = (
     "region",
@@ -31,20 +32,32 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def _nanos_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark can't read those
-    natively; we read them as long (legacy conf) and convert to µs."""
+def _footer(path: str) -> tuple[list[str], StructType | None]:
+    """One read of the parquet footer: the TIMESTAMP(NANOS) column names
+    and the schema Spark would infer, with those columns as LongType (what
+    ``nanosAsLong`` reads). ``([], None)`` when pyarrow cannot read it (a
+    directory layout); the reader then infers."""
     try:
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
-        schema = pq.read_schema(path)
-        return [f.name for f in schema if str(f.type) == "timestamp[ns]"]
+        arrow = pq.read_schema(path)
+        ns_cols = [f.name for f in arrow if str(f.type) == "timestamp[ns]"]
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
     except Exception:
-        return []
+        return [], None
+    return ns_cols, StructType(
+        [StructField(f.name, LongType(), f.nullable) if f.name in ns_cols else f for f in schema]
+    )
 
 
-def enable_nanos_compat(spark: SparkSession, path: str) -> list[str]:
-    """SESSION INVARIANT (single shared entry point — batch ``load_table``
+def read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """Read one parquet input with its footer's schema given, so no
+    schema-inference job runs. Returns the DataFrame and its
+    TIMESTAMP(NANOS) column names: Spark can't read those natively, so
+    they arrive as longs, for the caller to convert to µs.
+
+    SESSION INVARIANT (single shared entry point — batch ``load_table``
     and streaming ``stream_table`` both route here): when a parquet input
     carries TIMESTAMP(NANOS) columns, ``spark.sql.legacy.parquet.nanosAsLong``
     is turned on for the REST OF THE SESSION and deliberately never
@@ -54,19 +67,18 @@ def enable_nanos_compat(spark: SparkSession, path: str) -> list[str]:
     later read of a DIFFERENT nanos-timestamp parquet in the same session
     sees long columns — which is exactly the normalized contract this
     engine wants (every caller converts via ``timestamp_micros(c div
-    1000)``, the exact integer path). Returns the nanos column names."""
-    ns_cols = _nanos_columns(path)
+    1000)``, the exact integer path)."""
+    ns_cols, schema = _footer(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return ns_cols
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path), ns_cols
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = enable_nanos_compat(spark, path)
-    df = spark.read.parquet(path)
+    df, ns_cols = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for c in ns_cols:
         # integer division (`div`) keeps exactness — float division of
         # ~1e18 ns loses µs precision in a double

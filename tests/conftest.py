@@ -4,6 +4,7 @@ import contextlib
 import math
 import os
 import sys
+import uuid
 
 import duckdb
 import pytest
@@ -43,6 +44,20 @@ def broadcast_threshold(spark, value):
         yield
     finally:
         spark.conf.set(key, old)
+
+
+def jobs_run_by(spark, fn):
+    """Call ``fn()`` under a job group of its own; return its result and
+    the number of Spark jobs it ran (``setJobGroup`` +
+    ``statusTracker().getJobIdsForGroup``)."""
+    sc = spark.sparkContext
+    group = f"jobs-run-by-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count gate")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

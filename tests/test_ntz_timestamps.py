@@ -19,12 +19,13 @@ import io
 from contextlib import redirect_stdout
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from convml_data_spark import tables
 from convml_data_spark.functions.timeutils import epoch_micros
 from convml_data_spark.operators import asof, windows
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, jobs_run_by
 
 BASE = datetime(2024, 1, 1)
 
@@ -94,3 +95,46 @@ def test_load_table_normalizes_ntz_and_keeps_pushdown(spark):
     plan = buf.getvalue()
     pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
     assert pushed and any("GreaterThan(ts" in ln for ln in pushed)
+
+
+@pytest.mark.parametrize("name", tables.TABLE_NAMES)
+def test_load_table_runs_no_schema_inference_job(spark, name):
+    """load_table gives the reader the parquet footer's schema, so
+    building the DataFrame runs no job, and that schema is the one
+    Spark's own inference returns."""
+    path = f"{SF_DIR}/{name}.parquet"
+    _, jobs = jobs_run_by(spark, lambda: tables.load_table(spark, SF_DIR, name))
+    assert jobs == 0
+    df, _ = tables.read_parquet(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+
+
+def test_load_table_converts_nanos_columns_exactly(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column reads as long under the given footer
+    schema (what ``nanosAsLong`` returns) and converts to µs by integer
+    division, with no job while the plan is built."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ns, pa.timestamp("ns"))}),
+        str(tmp_path / "ns.parquet"),
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    was_set = spark.conf._jconf.contains(key)
+    old = spark.conf.get(key) if was_set else None
+    try:
+        df, jobs = jobs_run_by(spark, lambda: tables.load_table(spark, str(tmp_path), "ns"))
+        got = [
+            r[0]
+            for r in df.orderBy("id").select(F.unix_micros("ts")).collect()
+        ]
+    finally:
+        if was_set:
+            spark.conf.set(key, old)
+        else:
+            spark.conf.unset(key)
+    assert jobs == 0
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    assert got == [t // 1000 for t in ns]

@@ -7,10 +7,12 @@ import os
 import struct
 import zlib
 
+import pytest
 from pyspark.sql import functions as F
 
-from convml_data_spark import pipeline
-from convml_data_spark.operators import inference, multimodal, windows
+from convml_data_spark import pipeline, tables
+from convml_data_spark.operators import binning, corpus, inference, multimodal, windows
+from tests.conftest import SF_DIR, jobs_run_by
 
 SPEC = {
     "source": "synth",
@@ -541,17 +543,61 @@ def test_build_tile_data_construction_runs_no_jobs(spark):
             },
         }
     )
-    sc = spark.sparkContext
-    group = "tile-construction-jobcount"
-    sc.setJobGroup(group, "tile plan construction job-count gate")
-    try:
-        d = pipeline.build_tile_data(spark, spec, src_dx=25.0, src_nx=80)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) == 0, f"building the tile plan ran {len(jobs)} jobs"
+    d, jobs = jobs_run_by(
+        spark, lambda: pipeline.build_tile_data(spark, spec, src_dx=25.0, src_nx=80)
+    )
+    assert jobs == 0, f"building the tile plan ran {jobs} jobs"
     rows = d["tile_data"].collect()
     assert len(rows) == 12 and all(r["shape_ok"] for r in rows)
+
+
+def _frame(spark):
+    return spark.range(5000).select("id", (F.col("id") * 7919 % 1009).alias("v"))
+
+
+def _docs(spark):
+    return spark.range(200).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", F.lit("tok"), F.col("id").cast("string")).alias("text"),
+    )
+
+
+# building each of these plans runs either no job or only the cut-point
+# sketch: bucket offsets and sums are a relation in the plan
+CONSTRUCTION_JOBS = {
+    "global_cumsum": (
+        lambda spark: binning.global_cumsum(_frame(spark), "v", "id", cuts=[1500.0, 3000.0]),
+        "none",
+    ),
+    "pack_token_chunks": (
+        lambda spark: corpus.pack_token_chunks(_docs(spark), budget=16),
+        "none",
+    ),
+    "load_table": (lambda spark: tables.load_table(spark, SF_DIR, "events"), "none"),
+    "global_ranks": (
+        lambda spark: binning.global_ranks(_frame(spark), "v", tiebreak=["id"]),
+        "sketch",
+    ),
+    "ecdf_global": (lambda spark: binning.ecdf_global(_frame(spark), "v"), "sketch"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(CONSTRUCTION_JOBS))
+def test_construction_job_counts(spark, name):
+    """Construction jobs per call: none, or no more than
+    ``approxQuantile`` alone runs on the same frame (the cut-point
+    sketch). The built plan still executes."""
+    build, allowed = CONSTRUCTION_JOBS[name]
+    bound = 0
+    if allowed == "sketch":
+        p = max(spark.sparkContext.defaultParallelism, 2)
+        fracs = [i / p for i in range(1, p)]
+        _, bound = jobs_run_by(
+            spark, lambda: _frame(spark).stat.approxQuantile("v", fracs, 0.01)
+        )
+    df, jobs = jobs_run_by(spark, lambda: build(spark))
+    assert jobs <= bound, f"building {name} ran {jobs} jobs (bound {bound})"
+    assert df.count() > 0
 
 
 def test_compact_to_target_files(spark, tmp_path):
@@ -817,9 +863,9 @@ def test_spec_round_trips_scene_filter_and_image_function():
 
 def test_curation_pipeline_job_count_bounded(spark):
     """The composed curation program must stay ONE bounded-job-count
-    program (the r16-verdict composition gate): every stage is lazy
-    except connected_components, whose small near-dup graph here is
-    labelled in one driver pass after its pairs' checkpoint, so the
+    program (the r16-verdict composition gate): no stage collects per
+    row or per group, and connected_components' small near-dup graph
+    here is labelled in one driver pass after its pairs' checkpoint, so the
     end-to-end job count is a small constant — measured 37 jobs at
     sf0.001 on local[1], local[2] and local[4], 38 on local[8] (AQE on;
     74–76 while CC ran star rounds at this size). A blowup here means
@@ -828,19 +874,13 @@ def test_curation_pipeline_job_count_bounded(spark):
     cluster would save at 100 TB."""
     import __spark_entry__ as entrymod
 
-    sc = spark.sparkContext
-    group = "curation-jobcount"
-    sc.setJobGroup(group, "curation pipeline job-count gate")
-    try:
-        df = entrymod.queries()["spec_curation_pipeline"](
-            spark, "/root/testdata/sf0.001"
-        )
-        assert df.count() > 0
-    finally:
-        sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 45, (
-        f"curation pipeline ran {len(jobs)} jobs (bound 45) — a stage "
+    query = entrymod.queries()["spec_curation_pipeline"]
+    rows, jobs = jobs_run_by(
+        spark, lambda: query(spark, "/root/testdata/sf0.001").count()
+    )
+    assert rows > 0
+    assert 0 < jobs <= 45, (
+        f"curation pipeline ran {jobs} jobs (bound 45) — a stage "
         "is no longer composing lazily, or CC left its one-pass path"
     )
 

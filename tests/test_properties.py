@@ -34,11 +34,24 @@ def test_proportional_split_partitioning_independent(spark):
 
 def test_global_ranks_matches_sort(spark):
     df = spark.range(500).select((F.col("id") * 2654435761 % 997).alias("v"), F.col("id"))
-    ranked, n = global_ranks(df, "v", tiebreak=["id"])
-    assert n == 500
+    ranked = global_ranks(df, "v", tiebreak=["id"])
+    assert ranked.count() == 500
     got = [r["id"] for r in ranked.orderBy("_rank").collect()]
     want = [r["id"] for r in df.orderBy("v", "id").collect()]
     assert got == want
+
+
+def test_ranks_and_running_sums_of_an_empty_frame(spark):
+    """Empty input gives 0 rows and no error: the offsets relation is
+    empty, so its join empties the result with no special case."""
+    from convml_data_spark.operators import binning
+
+    df = spark.range(0).select("id", F.col("id").cast("double").alias("v"))
+    assert global_ranks(df, "v", tiebreak=["id"]).count() == 0
+    assert binning.global_cumsum(df, "id", "v", tiebreak=["id"]).count() == 0
+    assert binning.ecdf_global(df, "v").count() == 0
+    ranked, stats = binning.global_ranks_with_gap_stats(df, "id")
+    assert ranked.count() == 0 and stats is None
 
 
 def test_tile_placement_containment(spark):
@@ -297,8 +310,8 @@ def test_global_ranks_with_gap_stats_matches_bruteforce(spark):
     )
     rows = [(i, v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "id long, t long").repartition(5)
-    ranked, n, stats = global_ranks_with_gap_stats(df, "t", tiebreak=["id"])
-    assert n == len(vals)
+    ranked, stats = global_ranks_with_gap_stats(df, "t", tiebreak=["id"])
+    assert ranked.count() == len(vals)
     got = {r["id"]: r["_rank"] for r in ranked.collect()}
     for rank, (i, v) in enumerate(rows):
         assert got[i] == rank
