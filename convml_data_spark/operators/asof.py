@@ -80,8 +80,7 @@ def infer_min_spacing(df: DataFrame, time_col: str, partition_by: list[str] | No
     With ``partition_by`` the lag window is keyed and parallel. WITHOUT it,
     a bare ordered window would funnel every distinct time through one
     partition, so the keyless path uses the coarse-bucket scheme (see
-    ``_right_gap_stats``): per-hour-bucket lag windows in parallel, plus
-    boundary gaps from the bucket-summary table (bounded by time span).
+    ``_coarse_gaps``) over the distinct times.
     """
     micros = epoch_micros(time_col, dict(df.dtypes)[time_col])
     if partition_by:
@@ -96,48 +95,56 @@ def infer_min_spacing(df: DataFrame, time_col: str, partition_by: list[str] | No
         )
         return gaps[0]["m"] / 1e6 if gaps and gaps[0]["m"] is not None else None
     rows = df.select(micros.alias("_t")).where(F.col("_t").isNotNull()).distinct()
-    b = rows.withColumn("_b", F.floor(F.col("_t") / F.lit(_COARSE_US)))
-    w_in = Window.partitionBy("_b").orderBy("_t")
-    local = b.withColumn("_g", F.col("_t") - F.lag("_t").over(w_in))
-    summary = local.groupBy("_b").agg(
-        F.min("_t").alias("_mn"), F.max("_t").alias("_mx"), F.min("_g").alias("_lg")
-    )
-    w_b = Window.orderBy("_b")
-    g = summary.withColumn("_bg", F.col("_mn") - F.lag("_mx").over(w_b))
+    _, g = _coarse_gaps(rows)
     # least() skips nulls, so either side may be empty (single bucket /
     # no in-bucket pairs) without poisoning the min
-    out = g.agg(F.least(F.min("_lg"), F.min("_bg")).alias("m")).collect()
+    out = g.agg(F.least(F.min("_lo"), F.min("_bg")).alias("m")).collect()
     return out[0]["m"] / 1e6 if out and out[0]["m"] is not None else None
 
 
 _COARSE_US = 3_600_000_000  # 1 h — coarse-bucket granularity for gap stats
 
 
-def _right_gap_stats(df: DataFrame, time_col: str):
-    """(min_us, max_us, max_gap_us, p99_gap_us) of a time column, computed
-    WITHOUT a single-partition window: per-coarse-bucket lag windows run in
+def _coarse_gaps(rows: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Consecutive gaps of ``rows(_t)`` (non-null bigint micros) WITHOUT a
+    single-partition window: per-coarse-bucket lag windows run in
     parallel (partitioned by the 1-hour bucket), and gaps that straddle
     bucket boundaries come from an ordered pass over the BUCKET SUMMARY
     table, whose row count is bounded by the data's time span in hours —
-    not its row count. Returns None for an empty side. Four plan-time
-    scalars, like infer_min_spacing's A3 inference. The p99 gap (GK sketch,
-    mergeable) is the skew guard's starting radius; being approximate only
-    shifts WHERE the geometric pass ladder starts, never correctness."""
-    t = epoch_micros(time_col, dict(df.dtypes)[time_col])
-    rows = df.select(t.alias("_t")).where(F.col("_t").isNotNull())
+    not its row count.
+
+    Returns ``(local, summary)``: ``local`` is every row with its
+    in-bucket gap ``_g`` (NULL at a bucket's first row); ``summary`` has
+    one row per bucket with its first/last time ``_mn``/``_mx``, its
+    min/max in-bucket gap ``_lo``/``_hi`` and ``_bg``, the gap from the
+    previous bucket's last time (NULL for the first bucket)."""
     b = rows.withColumn("_b", F.floor(F.col("_t") / F.lit(_COARSE_US)))
     w_in = Window.partitionBy("_b").orderBy("_t")
     local = b.withColumn("_g", F.col("_t") - F.lag("_t").over(w_in))
     summary = local.groupBy("_b").agg(
-        F.min("_t").alias("_mn"), F.max("_t").alias("_mx"), F.max("_g").alias("_lg")
+        F.min("_t").alias("_mn"),
+        F.max("_t").alias("_mx"),
+        F.min("_g").alias("_lo"),
+        F.max("_g").alias("_hi"),
     )
     w_b = Window.orderBy("_b")
-    g = summary.withColumn("_bg", F.col("_mn") - F.lag("_mx").over(w_b))
+    return local, summary.withColumn("_bg", F.col("_mn") - F.lag("_mx").over(w_b))
+
+
+def _right_gap_stats(df: DataFrame, time_col: str):
+    """(min_us, max_us, max_gap_us, p99_gap_us) of a time column from the
+    coarse-bucket gaps (``_coarse_gaps``). Returns None for an empty side.
+    Four plan-time scalars, like infer_min_spacing's A3 inference. The p99
+    gap (GK sketch, mergeable) is the skew guard's starting radius; being
+    approximate only shifts WHERE the geometric pass ladder starts, never
+    correctness."""
+    t = epoch_micros(time_col, dict(df.dtypes)[time_col])
+    local, g = _coarse_gaps(df.select(t.alias("_t")).where(F.col("_t").isNotNull()))
     out = g.agg(
         F.min("_mn").alias("mn"),
         F.max("_mx").alias("mx"),
         F.greatest(
-            F.coalesce(F.max("_lg"), F.lit(0)), F.coalesce(F.max("_bg"), F.lit(0))
+            F.coalesce(F.max("_hi"), F.lit(0)), F.coalesce(F.max("_bg"), F.lit(0))
         ).alias("gap"),
     ).collect()
     if not out or out[0]["mn"] is None:

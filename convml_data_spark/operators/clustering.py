@@ -98,7 +98,6 @@ DENSE_CELL_THRESHOLD = 4096
 def _eps_edges(
     pts: DataFrame,
     eps: float,
-    durable: bool | None,
     skew_observation: "Observation | None",
     dense_cell_threshold: int | None,
 ) -> DataFrame:
@@ -205,7 +204,7 @@ def _eps_edges(
         )
         # four branch inputs read this relation — materialize the
         # scan+count+tag work once (lazy: filled by the edge job)
-        tagged = materialize_for_reuse(tagged, durable=durable)
+        tagged = materialize_for_reuse(tagged)
         sparse = tagged.where(~F.col("_dense"))
         dense = tagged.where(F.col("_dense"))
         cand = halo_join(sparse, sparse, "cx", "cy", 1, F.lit(False)).unionByName(
@@ -231,11 +230,8 @@ def _eps_edges(
     # assignment; every ladder level) — materialize it ONCE, lazily (an
     # eager checkpoint would execute the full grid join at plan
     # CONSTRUCTION time — every explain() of a dbscan query would run the
-    # job); durable=True swaps the executor-local blocks for a reliable
-    # checkpoint. The opt-in skew probe forces eager: see the docstring.
-    return materialize_for_reuse(
-        edges, durable=durable, eager=skew_observation is not None
-    )
+    # job). The opt-in skew probe forces eager: see the docstring.
+    return materialize_for_reuse(edges, eager=skew_observation is not None)
 
 
 def dbscan_labels(
@@ -245,7 +241,6 @@ def dbscan_labels(
     id_col: str = "id",
     x_col: str = "x",
     y_col: str = "y",
-    durable: bool | None = None,
     skew_observation: "Observation | None" = None,
     dense_cell_threshold: int | None = DENSE_CELL_THRESHOLD,
 ) -> DataFrame:
@@ -255,11 +250,6 @@ def dbscan_labels(
     ``points`` must be unique per ``id_col``. Inputs with more dimensions
     should pass a 2-D projection (the reference applies its density
     transform after PCA reduction for the same reason).
-
-    ``durable`` picks the edge-list materialization
-    (:func:`~.persist.materialize_for_reuse`): default executor-local
-    checkpoint, or a reliable checkpoint that survives executor loss on a
-    real cluster.
 
     ``skew_observation`` (optional ``pyspark.sql.Observation``) rides the
     candidate join at no extra scan cost (the dedup CC convergence-probe
@@ -292,19 +282,17 @@ def dbscan_labels(
             F.col(x_col).cast("double").alias("x"),
             F.col(y_col).cast("double").alias("y"),
         ),
-        durable=durable,
     )
     edges = _eps_edges(
-        pts, eps, durable, skew_observation, dense_cell_threshold
+        pts, eps, skew_observation, dense_cell_threshold
     ).select("id_a", "id_b")
-    return _labels_from_edges(pts, edges, min_pts, durable)[0]
+    return _labels_from_edges(pts, edges, min_pts)[0]
 
 
 def _labels_from_edges(
     pts: DataFrame,
     edges: DataFrame,
     min_pts: int,
-    durable: bool | None,
     prev_core_labels: DataFrame | None = None,
     materialize_core: bool = False,
     core: DataFrame | None = None,
@@ -363,7 +351,7 @@ def _labels_from_edges(
         .unionByName(core.select(F.col("id").alias("id_a"), F.col("id").alias("id_b")))
     )
     if prev_core_labels is None:
-        comp = connected_components(cc_edges, durable=durable).withColumnRenamed(
+        comp = connected_components(cc_edges).withColumnRenamed(
             "component", "label"
         )
         core_labeled = core.join(comp, "id").select("id", "label")
@@ -382,7 +370,7 @@ def _labels_from_edges(
                 F.coalesce("_lb", F.col("id_b")).alias("id_b"),
             )
         )
-        sup = connected_components(contracted, durable=durable).select(
+        sup = connected_components(contracted).select(
             F.col("id").alias("_node"), F.col("component").alias("label")
         )
         core_labeled = (
@@ -397,7 +385,7 @@ def _labels_from_edges(
         # action on any consumer
         from .persist import materialize_for_reuse
 
-        core_labeled = materialize_for_reuse(core_labeled, durable=durable)
+        core_labeled = materialize_for_reuse(core_labeled)
     if not attach_borders:
         out = (
             pts.select("id")
@@ -438,7 +426,6 @@ def dbscan_eps_ladder(
     id_col: str = "id",
     x_col: str = "x",
     y_col: str = "y",
-    durable: bool | None = None,
     warm_start: bool = True,
     skew_observation: "Observation | None" = None,
     dense_cell_threshold: int | None = DENSE_CELL_THRESHOLD,
@@ -490,10 +477,9 @@ def dbscan_eps_ladder(
             F.col(x_col).cast("double").alias("x"),
             F.col(y_col).cast("double").alias("y"),
         ),
-        durable=durable,
     )
     edges = _eps_edges(
-        pts, eps_max, durable, skew_observation, dense_cell_threshold
+        pts, eps_max, skew_observation, dense_cell_threshold
     )
     outs = []
     prev_core_labels = None
@@ -509,7 +495,6 @@ def dbscan_eps_ladder(
             pts,
             level_edges,
             min_pts,
-            durable,
             prev_core_labels=prev_core_labels,
             materialize_core=warm_start and not last,
         )
@@ -529,7 +514,6 @@ def mutual_reachability_ladder(
     id_col: str = "id",
     x_col: str = "x",
     y_col: str = "y",
-    durable: bool | None = None,
     warm_start: bool = True,
     dense_cell_threshold: int | None = DENSE_CELL_THRESHOLD,
 ) -> DataFrame:
@@ -577,9 +561,8 @@ def mutual_reachability_ladder(
             F.col(x_col).cast("double").alias("x"),
             F.col(y_col).cast("double").alias("y"),
         ),
-        durable=durable,
     )
-    edges = _eps_edges(pts, eps_max, durable, None, dense_cell_threshold)
+    edges = _eps_edges(pts, eps_max, None, dense_cell_threshold)
     w = Window.partitionBy("id_a").orderBy("_d2", "id_b")
     kth = (
         edges.select("id_a", "id_b", "_d2", F.row_number().over(w).alias("_r"))
@@ -588,9 +571,7 @@ def mutual_reachability_ladder(
     )
     # all points, NULL core_d2 when never core within the ladder; feeds
     # every level's core filter AND every level's output join
-    cd = materialize_for_reuse(
-        pts.select("id").join(kth, "id", "left"), durable=durable
-    )
+    cd = materialize_for_reuse(pts.select("id").join(kth, "id", "left"))
     outs = []
     prev = None
     for lvl, eps in enumerate(eps_levels):
@@ -604,7 +585,6 @@ def mutual_reachability_ladder(
             pts,
             level_edges,
             min_pts,
-            durable,
             prev_core_labels=prev,
             materialize_core=warm_start and not last,
             core=core,

@@ -314,7 +314,6 @@ def bpe_train_merges(
     docs: DataFrame,
     num_merges: int = 8,
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """BPE pair-merge TRAINING (Sennrich et al. 2016, "Neural Machine
     Translation of Rare Words with Subword Units") — the actual
@@ -347,7 +346,7 @@ def bpe_train_merges(
     ≤ word_len rows per word), one deterministic TakeOrdered-1 for the
     argmax, and one broadcast of that single row into the re-segmenting
     projection; the evolving state is materialized per round
-    (``durable``: :func:`~.persist.materialize_for_reuse`) so round k+1
+    (:func:`~.persist.materialize_for_reuse`) so round k+1
     re-reads a checkpoint, not the whole chain. Web-scale corpora with
     unbounded raw vocabularies should pre-cap ``docs`` (e.g. feed the
     :func:`build_vocab` min-count survivors as pseudo-docs) — the loop
@@ -363,12 +362,10 @@ def bpe_train_merges(
     state = words.select(
         "w", "c", F.regexp_replace(F.col("w"), "(.)", " $1 ").alias("seg")
     )
-    return _bpe_merge_rounds(state, num_merges, durable)
+    return _bpe_merge_rounds(state, num_merges)
 
 
-def _bpe_merge_rounds(
-    state: DataFrame, num_merges: int, durable: bool | None = None
-) -> DataFrame:
+def _bpe_merge_rounds(state: DataFrame, num_merges: int) -> DataFrame:
     """The BPE training loop shared by the word-level and byte-level
     trainers: ``state`` is ``(w, c, seg)`` with ``seg`` in the
     double-space string form (`` s1  s2  s3 ``). Symbol alphabet is the
@@ -378,7 +375,7 @@ def _bpe_merge_rounds(
 
     merges = []
     for k in range(num_merges):
-        state = materialize_for_reuse(state, durable=durable)
+        state = materialize_for_reuse(state)
         syms = F.split(F.trim(F.col("seg")), "  ")
         m = F.greatest(F.size("_sy") - 1, F.lit(0))
         pairs = (
@@ -401,7 +398,6 @@ def _bpe_merge_rounds(
             pairs.orderBy(
                 F.col("pair_count").desc(), F.col("s1"), F.col("s2")
             ).limit(1),
-            durable=durable,
         )
         merges.append(
             best.select(
@@ -534,7 +530,6 @@ def bpe_train_byte_merges(
     docs: DataFrame,
     num_merges: int = 8,
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """BYTE-level BPE training (the GPT-2 tokenizer family: Radford et
     al. 2019; Sennrich et al. 2016 for the merge loop) — the fidelity
@@ -559,7 +554,7 @@ def bpe_train_byte_merges(
         F.count("*").alias("c")
     )
     state = words.select("w", "c", _byte_seg(F.col("w")).alias("seg"))
-    return _bpe_merge_rounds(state, num_merges, durable)
+    return _bpe_merge_rounds(state, num_merges)
 
 
 def bpe_encode_bytes(
@@ -1426,7 +1421,6 @@ def exact_substring_self_dedup(
     k: int = 7,
     id_col: str = "doc_id",
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Train×train exact-substring SELF-deduplication — the headline use
     of Lee et al. 2022 ("Deduplicating Training Data Makes Language
@@ -1451,7 +1445,7 @@ def exact_substring_self_dedup(
     (in-row explode) project IMMEDIATELY to ``(id, start, md5)`` — no
     window text ever shuffles; the span relation feeds two consumers
     (the owner aggregation and the hit join), so it is materialized once
-    (``durable`` as in :func:`~.persist.materialize_for_reuse`); owners
+    (:func:`~.persist.materialize_for_reuse`); owners
     come from one map-side-combined hash aggregation KEPT ONLY where
     ``min(id) != max(id)`` — unique spans (the overwhelming mass of a
     real corpus) never enter the hit join; everything is grouped by span
@@ -1467,7 +1461,7 @@ def exact_substring_self_dedup(
     span = w.where(F.col("end") - F.col("start") == k).select(
         F.col(id_col), F.col("start"), F.md5("win_text").alias("_h")
     )
-    span = materialize_for_reuse(span, durable=durable)
+    span = materialize_for_reuse(span)
     dup = (
         span.groupBy("_h")
         .agg(F.min(id_col).alias("_owner"), F.max(id_col).alias("_mx"))
@@ -1561,7 +1555,6 @@ def bigram_backoff_score(
     alpha: float = 0.4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Stupid-Backoff bigram cross-entropy (Brants et al. 2007, "Large
     Language Models in Machine Translation") — the standard CCNet/KenLM
@@ -1589,8 +1582,8 @@ def bigram_backoff_score(
     (N, V) scalars ride a broadcast 1-row relation. The unigram LM
     relation feeds THREE consumers (both unigram joins + the scalars) —
     it is vocabulary-bounded, so it is materialized once rather than
-    re-scanning the LM corpus per consumer (``durable`` picks the
-    checkpoint kind, :func:`~.persist.materialize_for_reuse`). Float
+    re-scanning the LM corpus per consumer
+    (:func:`~.persist.materialize_for_reuse`). Float
     discipline as the whole LM-score family: every ``ln`` term casts to
     DECIMAL(38,12) before summing (exact, order-independent under AQE),
     final ``round(6) + 0.0`` (−0.0 repr guard).
@@ -1606,7 +1599,7 @@ def bigram_backoff_score(
         .groupBy("w")
         .agg(F.count("*").alias("_cu"))
     )
-    cu = materialize_for_reuse(cu, durable=durable)
+    cu = materialize_for_reuse(cu)
     nv = cu.agg(F.sum("_cu").alias("_N"), F.count("*").alias("_V"))
     scored = (
         inst.join(cb, ["w1", "w2"], "left")
@@ -1653,7 +1646,6 @@ def kneser_ney_score(
     discount: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Interpolated Kneser-Ney bigram cross-entropy (Kneser & Ney 1995;
     Chen & Goodman 1998's interpolated formulation) — the smoothing
@@ -1710,7 +1702,6 @@ def kneser_ney_score(
     # context relation, continuation relation, T scalar)
     cb = materialize_for_reuse(
         lm_big.groupBy("w1", "w2").agg(F.count("*").alias("_cb")),
-        durable=durable,
     )
     ctx = cb.groupBy("w1").agg(
         F.sum("_cb").alias("_c1"), F.count("*").alias("_nf1")
@@ -1763,7 +1754,6 @@ def kneser_ney_trigram_score(
     discount: float = 0.75,
     id_col: str = "doc_id",
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Interpolated Kneser-Ney TRIGRAM cross-entropy — the recursive
     Chen & Goodman 1998 chain one order above :func:`kneser_ney_score`,
@@ -1821,7 +1811,6 @@ def kneser_ney_trigram_score(
         _trigram_instances(lm_docs, [], text_col)
         .groupBy("w1", "w2", "w3")
         .agg(F.count("*").alias("_c3")),
-        durable=durable,
     )
     ctx3 = c3.groupBy("w1", "w2").agg(
         F.sum("_c3").alias("_c12"), F.count("*").alias("_nf12")
@@ -1831,7 +1820,6 @@ def kneser_ney_trigram_score(
     # predecessor counts and the T scalar
     n2 = materialize_for_reuse(
         c3.groupBy("w2", "w3").agg(F.count("*").alias("_n2")),
-        durable=durable,
     )
     ctx2 = n2.groupBy("w2").agg(
         F.sum("_n2").alias("_cv"), F.count("*").alias("_nfv")
@@ -1915,7 +1903,6 @@ def trigram_backoff_score(
     alpha: float = 0.4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Stupid-Backoff TRIGRAM cross-entropy — the recursive backoff chain
     of Brants et al. 2007 one level above :func:`bigram_backoff_score`
@@ -1943,7 +1930,7 @@ def trigram_backoff_score(
     feeds TWO consumers (the (w1 w2) denominator join and the (w2 w3)
     backoff join) and the unigram relation THREE (both word roles + the
     scalars) — both are vocabulary-bounded and materialized once
-    (``durable``: :func:`~.persist.materialize_for_reuse`). Float
+    (:func:`~.persist.materialize_for_reuse`). Float
     discipline as the whole LM-score family: every ``ln`` term casts to
     DECIMAL(38,12) before summing, final ``round(6) + 0.0``.
     """
@@ -1961,13 +1948,13 @@ def trigram_backoff_score(
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("_c2"))
     )
-    c2 = materialize_for_reuse(c2, durable=durable)
+    c2 = materialize_for_reuse(c2)
     cu = (
         lm_docs.select(F.explode(T.tokens(F.lower(F.col(text_col)))).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("_cu"))
     )
-    cu = materialize_for_reuse(cu, durable=durable)
+    cu = materialize_for_reuse(cu)
     nv = cu.agg(F.sum("_cu").alias("_N"), F.count("*").alias("_V"))
     scored = (
         inst.join(c3, ["w1", "w2", "w3"], "left")

@@ -783,7 +783,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 25,
-    durable: bool | None = None,
 ) -> DataFrame:
     """Connected components over an undirected near-dup edge list:
     (id, component) with component = the minimum node id reachable.
@@ -831,11 +830,10 @@ def connected_components(
     risk after the exact check is hash-sum collision between different
     edge sets (three independent 64-bit hash sums + a count, ≈ 2^-192),
     not retry noise. A checkpoint truncates lineage each step so the
-    plan does not grow with the iteration count (``durable`` picks the
-    mechanism — executor-local by default, reliable on request, see
-    :func:`~.persist.materialize_for_reuse`; observation metrics fire on
-    both checkpoint kinds). Only nodes that appear in ``pairs`` are
-    labelled (self-pairs label themselves).
+    plan does not grow with the iteration count
+    (:func:`~.persist.materialize_for_reuse` picks the mechanism;
+    observation metrics fire on both checkpoint kinds). Only nodes that
+    appear in ``pairs`` are labelled (self-pairs label themselves).
 
     Small graphs skip the star rounds. The normalized pair list is
     checkpointed first either way, and its observation also sums the
@@ -911,7 +909,7 @@ def connected_components(
         )
         gate_exprs = [F.count(F.lit(1)).alias("rows"), F.sum(pair_bytes).alias("bytes")]
     p0 = materialize_for_reuse(
-        p0.observe(obs0, *_sig_exprs(), *gate_exprs), durable=durable, eager=True
+        p0.observe(obs0, *_sig_exprs(), *gate_exprs), eager=True
     )
     sig = _sig_of(obs0)
     n_edges = sig[0] or 0
@@ -972,11 +970,11 @@ def connected_components(
         fused = max_iters - rounds >= 2
         step = _small_star(_large_star(e))
         if fused:
-            inner = materialize_for_reuse(step, durable=durable)
+            inner = materialize_for_reuse(step)
             step = _small_star(_large_star(inner))
         rounds += 2 if fused else 1
         e = materialize_for_reuse(
-            step.observe(obs_out, *_sig_exprs()), durable=durable, eager=True
+            step.observe(obs_out, *_sig_exprs()), eager=True
         )
         new_sig = _sig_of(obs_out)
         # accumulator match is only the trigger — accept only on an
@@ -1016,7 +1014,6 @@ def canonical_survivors(
     id_col: str = "id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    durable: bool | None = None,
 ) -> DataFrame:
     """The user-facing dedup collapse: given the full id set and the
     near-dup pair list (from any candidate generator — minhash-LSH,
@@ -1029,9 +1026,8 @@ def canonical_survivors(
     ``spark.sql.autoBroadcastJoinThreshold`` is labelled in one driver
     pass and joins back as a local relation; above it, both steps are
     hash-partitioned joins — no driver state, no cross product.
-    ``durable`` threads through to the CC checkpoints.
     """
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b, durable=durable)
+    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     drop = comp.where(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
@@ -1104,7 +1100,6 @@ def incremental_sig_dedup(
     threshold: float = 0.5,
     bands: int = 4,
     id_col: str = "id",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Incremental corpus dedup against a MinHash signature INDEX — the
     production shape for continuously-ingested corpora: the standing
@@ -1148,7 +1143,7 @@ def incremental_sig_dedup(
     # the survivor collapse): un-materialized, Catalyst re-plans the
     # whole upstream signature build — re-shingling the batch text 3x —
     # per consumer. Sigs are num_hashes ints per doc, tiny vs the text.
-    new_sigs = materialize_for_reuse(new_sigs, durable=durable)
+    new_sigs = materialize_for_reuse(new_sigs)
     nb = banded(new_sigs, "nid")
     ob = banded(old_sigs, "oid")
     cross_drop = (
@@ -1157,9 +1152,7 @@ def incremental_sig_dedup(
         .select(F.col("nid").alias(id_col))
         .distinct()
     )
-    rem = materialize_for_reuse(
-        new_sigs.join(cross_drop, id_col, "left_anti"), durable=durable
-    )
+    rem = materialize_for_reuse(new_sigs.join(cross_drop, id_col, "left_anti"))
     rb = banded(rem, "id_a")
     rb2 = rb.select(
         F.col("id_a").alias("id_b"), F.col("sig_id_a").alias("sig_id_b"),
@@ -1172,7 +1165,7 @@ def incremental_sig_dedup(
         .select("id_a", "id_b")
         .distinct()
     )
-    return canonical_survivors(rem, within, id_col=id_col, durable=durable)
+    return canonical_survivors(rem, within, id_col=id_col)
 
 
 def best_survivors(
@@ -1182,7 +1175,6 @@ def best_survivors(
     id_col: str = "id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Quality-aware dedup collapse: keep the HIGHEST-``quality_col`` row
     per duplicate cluster (ties broken by minimum id) plus every row in no
@@ -1199,7 +1191,7 @@ def best_survivors(
     NULL qualities lose to any non-NULL quality; an all-NULL cluster
     falls back to the min-id rule (null-safe equality on the max).
     """
-    comp = connected_components(pairs, id_a=id_a, id_b=id_b, durable=durable)
+    comp = connected_components(pairs, id_a=id_a, id_b=id_b)
     members = comp.join(
         ids.select(F.col(id_col).alias("id"), F.col(quality_col).alias("_q")),
         "id",
@@ -1316,7 +1308,6 @@ def cdc_dedup_stats(
     mask_bits: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Per-doc content-defined-chunk dedup statistics:
     ``(id, n_chunks, n_dup_chunks)`` where a chunk is DUP when its hash
@@ -1326,8 +1317,8 @@ def cdc_dedup_stats(
     (an edited copy shares most chunks even though every byte offset
     moved). One corpus-wide hash aggregation on chunk_hash (map-side
     combined, broadcast nothing) + one per-doc aggregation; the chunk
-    table is materialized once for its two consumers (``durable`` picks
-    the checkpoint kind, see :func:`~.persist.materialize_for_reuse`).
+    table is materialized once for its two consumers
+    (:func:`~.persist.materialize_for_reuse`).
     """
     from .persist import materialize_for_reuse
 
@@ -1338,7 +1329,7 @@ def cdc_dedup_stats(
     # the chunk table feeds two consumers (corpus-wide counts + the
     # per-doc join-back) — materialize once, lazily, instead of running
     # the tokenize/window/rebuild program twice
-    ch = materialize_for_reuse(ch, durable=durable)
+    ch = materialize_for_reuse(ch)
     counts = ch.groupBy("chunk_hash").agg(F.count("*").alias("_n"))
     return (
         ch.join(counts, "chunk_hash")

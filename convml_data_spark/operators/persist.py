@@ -1,4 +1,5 @@
-"""Multi-consumer materialization with a durability choice.
+"""Multi-consumer materialization with one deployment-wide durability
+switch.
 
 Several composed programs materialize an intermediate relation exactly
 once because multiple downstream consumers would otherwise re-execute the
@@ -10,13 +11,13 @@ on local[x] — but those blocks are NOT fault-tolerant: on a real cluster
 an executor loss mid-query invalidates them and kills the job (the
 blocks have no lineage to recompute from once truncated).
 
-``materialize_for_reuse`` keeps that default and adds an opt-in durable
-path: a RELIABLE checkpoint into the session's configured checkpoint
-directory (``spark.sparkContext.setCheckpointDir`` — HDFS/object store
-on a cluster), which survives executor loss at the cost of one write.
-The flag can also be forced fleet-wide with
-``SPARK_GRAFT_DURABLE_CHECKPOINT=1`` so long-running production jobs opt
-in without code changes.
+Setting ``SPARK_GRAFT_DURABLE_CHECKPOINT=1`` turns every such barrier
+into a RELIABLE checkpoint into the session's checkpoint directory
+(``spark.sparkContext.setCheckpointDir`` — HDFS/object store on a
+cluster), which survives executor loss at the cost of one write. Where
+the checkpoint lives is a property of the deployment, not of a call:
+no operator takes a durability argument, and this module is the only
+reader of the flag.
 """
 
 from __future__ import annotations
@@ -28,14 +29,12 @@ from pyspark.sql import DataFrame
 ENV_FLAG = "SPARK_GRAFT_DURABLE_CHECKPOINT"
 
 
-def materialize_for_reuse(
-    df: DataFrame, durable: bool | None = None, eager: bool = False
-) -> DataFrame:
+def materialize_for_reuse(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate lineage for a relation consumed by several actions.
 
-    ``durable=None`` (default) reads the ``SPARK_GRAFT_DURABLE_CHECKPOINT``
-    env flag; ``False`` → ``localCheckpoint`` (fast, executor-local, not
-    fault-tolerant); ``True`` → reliable ``checkpoint`` (requires a
+    Reads the ``SPARK_GRAFT_DURABLE_CHECKPOINT`` env flag on each call:
+    anything but ``1`` → ``localCheckpoint`` (fast, executor-local, not
+    fault-tolerant); ``1`` → reliable ``checkpoint`` (requires a
     checkpoint dir — raises with instructions if none is set, rather than
     letting Spark fail deep inside the job).
 
@@ -47,9 +46,7 @@ def materialize_for_reuse(
     the first action. ``spec_curation_pipeline`` at sf0.01 on local[2]:
     its nine lazy calls ran 22 jobs (15 with AQE off), its sink 8.
     """
-    if durable is None:
-        durable = os.environ.get(ENV_FLAG, "") == "1"
-    if not durable:
+    if os.environ.get(ENV_FLAG, "") != "1":
         return df.localCheckpoint(eager=eager)
     sc = df.sparkSession.sparkContext
     if sc._jsc.sc().getCheckpointDir().isEmpty():

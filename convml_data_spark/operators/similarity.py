@@ -280,7 +280,6 @@ def _sample_fit_centroids(
     seed: int,
     vec_col: str,
     fit_fraction: float,
-    max_iters: int = 20,
     id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Deterministic Lloyd k-means on a bounded collected sample
@@ -290,7 +289,7 @@ def _sample_fit_centroids(
     pts = _collect_fit_sample(embeddings, vec_col, id_col, fit_fraction, seed)
     if len(pts) == 0:
         raise ValueError("cannot fit IVF centroids on an empty table")
-    return _fit_lloyd(pts, k=min(n_lists, len(pts)), seed=seed, max_iters=max_iters)
+    return _fit_lloyd(pts, k=min(n_lists, len(pts)), seed=seed)
 
 
 def ivf_index(
@@ -920,7 +919,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_bucket: int | None = LSH_MAX_BUCKET,
-    durable: bool | None = None,
     cluster: str = "lsh",
     kmeans_k: int = 8,
     kmeans_rounds: int = 2,
@@ -998,7 +996,6 @@ def semantic_dedup(
         id_col=id_col,
         id_a="id_a",
         id_b="id_b",
-        durable=durable,
     )
 
 

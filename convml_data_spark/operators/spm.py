@@ -269,14 +269,14 @@ def _pack(vocab: DataFrame) -> DataFrame:
     )
 
 
-def _with_units(counts: DataFrame, count_col: str, durable) -> DataFrame:
+def _with_units(counts: DataFrame, count_col: str) -> DataFrame:
     """(piece, n) -> (piece, n, units): normalize by the total and
     quantize. The counts relation feeds BOTH the total aggregate and the
     projection — materialized (bounded by the vocabulary) so the
     upstream E-step does not re-plan per consumer."""
     from .persist import materialize_for_reuse
 
-    counts = materialize_for_reuse(counts, durable=durable)
+    counts = materialize_for_reuse(counts)
     tot = F.broadcast(
         counts.agg(F.sum(count_col).cast("bigint").alias("_tot"))
     )
@@ -309,7 +309,6 @@ def unigram_train(
     em_rounds: int = 2,
     word_max_len: int = 10,
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Train a unigram-LM subword vocabulary (module docstring for the
     algorithm and determinism contract). Returns ``(piece, n, logp)`` —
@@ -329,9 +328,7 @@ def unigram_train(
         raise ValueError(f"piece_max_len must be >= 2, got {piece_max_len}")
     from .persist import materialize_for_reuse
 
-    words = materialize_for_reuse(
-        _distinct_words(docs, text_col, word_max_len), durable=durable
-    )
+    words = materialize_for_reuse(_distinct_words(docs, text_col, word_max_len))
     # seed substring counts (with in-word multiplicity), one in-row grid
     # explode over the bounded distinct-word relation
     grid = F.flatten(
@@ -349,7 +346,6 @@ def unigram_train(
         words.select(F.explode(grid).alias("piece"), F.col("c"))
         .groupBy("piece")
         .agg(F.sum("c").alias("cnt")),
-        durable=durable,
     )
     chars = seeds.where(F.length("piece") == 1)
     multis = (
@@ -357,7 +353,7 @@ def unigram_train(
         .orderBy(F.col("cnt").desc(), F.col("piece"))
         .limit(int(vocab_top))
     )
-    vocab = _with_units(chars.unionByName(multis), "cnt", durable)
+    vocab = _with_units(chars.unionByName(multis), "cnt")
     for _ in range(em_rounds):
         seg = viterbi_segment(
             words.crossJoin(F.broadcast(_pack(vocab))),
@@ -370,7 +366,7 @@ def unigram_train(
             .groupBy("piece")
             .agg(F.sum("c").alias("cnt"))
         )
-        vocab = _with_units(counts, "cnt", durable)
+        vocab = _with_units(counts, "cnt")
     return vocab.select(
         "piece", "n", (F.col("units").cast("double") / F.lit(1e6)).alias("logp")
     )

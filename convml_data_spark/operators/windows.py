@@ -3,7 +3,8 @@
 Reference semantics:
 - W1 consecutive diff: ``np.diff`` over sorted times
   (convml_data/pipeline/aux_sources.py:203) / ``differentiate("level")``
-  (sources/era5/base.py:120).
+  (sources/era5/base.py:120) — a plain ``lag`` diff at its call sites
+  (``asof.infer_min_spacing`` for A3, the A10 column integral).
 - W2 argmin-per-group: first index of minimum (aux_sources.py:216-218) —
   ``ROW_NUMBER() OVER (... ORDER BY metric, tiebreak) = 1``.
 - W3 local peaks: ``scipy.signal.find_peaks`` over an ordered profile
@@ -18,22 +19,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def consecutive_diff(
-    df: DataFrame,
-    order_col: str,
-    value_col: str,
-    partition_by: list[str],
-    tiebreak: list[str] | None = None,
-) -> DataFrame:
-    """W1: value − lag(value) within each partition ordered by ``order_col``.
-
-    Pass ``tiebreak`` columns whenever ``(partition, order_col)`` can hold
-    duplicates — lag over a tied order is otherwise plan-dependent (AQE /
-    re-partitioning can reorder equal keys between runs)."""
-    w = Window.partitionBy(*partition_by).orderBy(order_col, *(tiebreak or []))
-    return df.withColumn("diff", F.col(value_col) - F.lag(value_col).over(w))
 
 
 def argmin_per_group(
@@ -55,7 +40,9 @@ def local_peaks(
     tiebreak: list[str] | None = None,
 ) -> DataFrame:
     """W3: rows strictly greater than both ordered neighbours. Pass
-    ``tiebreak`` when the order key can repeat (see consecutive_diff)."""
+    ``tiebreak`` columns whenever ``(partition, order_col)`` can hold
+    duplicates — lag/lead over a tied order is otherwise plan-dependent
+    (AQE / re-partitioning can reorder equal keys between runs)."""
     w = Window.partitionBy(*partition_by).orderBy(order_col, *(tiebreak or []))
     v = F.col(value_col)
     return (

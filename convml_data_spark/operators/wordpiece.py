@@ -45,7 +45,6 @@ def wordpiece_vocab(
     piece_max_len: int = 4,
     word_max_len: int = 10,
     text_col: str = "text",
-    durable: bool | None = None,
 ) -> DataFrame:
     """Deterministic WordPiece vocabulary from a corpus: every
     single-character piece in both positional forms (word-initial raw,
@@ -78,7 +77,6 @@ def wordpiece_vocab(
         _distinct_words(docs, text_col, word_max_len).where(
             ~F.col("w").contains("#")
         ),
-        durable=durable,
     )
     grid = F.flatten(
         F.transform(
@@ -97,7 +95,6 @@ def wordpiece_vocab(
         words.select(F.explode(grid).alias("piece"), F.col("c"))
         .groupBy("piece")
         .agg(F.sum("c").alias("cnt")),
-        durable=durable,
     )
     body_len = F.length("piece") - F.when(
         F.col("piece").startswith("##"), F.lit(2)

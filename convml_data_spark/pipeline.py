@@ -894,7 +894,6 @@ def _pack_gray8(
     height: int,
     p_col: str,
     q_col: str,
-    byte_col: str = "_byte",
 ) -> DataFrame:
     """Shared gray8 image packer (the tile AND scene image products):
     per-key pixel rows → row-major uint8 payload packed ENTIRELY
@@ -903,17 +902,17 @@ def _pack_gray8(
     :func:`~.operators.multimodal.encode_png` turns each payload into a
     grayscale PNG Arrow-batched, the key columns riding through on the
     same row. Callers must supply exactly width·height rows per key with
-    ``byte_col`` already in [0, 255].
+    ``_byte`` already in [0, 255].
 
     Returns (key columns..., png binary).
     """
     from .operators import multimodal
 
     ordered = F.array_sort(
-        F.collect_list(F.struct(F.col(q_col), F.col(p_col), F.col(byte_col)))
+        F.collect_list(F.struct(F.col(q_col), F.col(p_col), F.col("_byte")))
     )
     hexstr = F.array_join(
-        F.transform(ordered, lambda s: F.lpad(F.hex(s[byte_col]), 2, "0")), ""
+        F.transform(ordered, lambda s: F.lpad(F.hex(s["_byte"]), 2, "0")), ""
     )
     keyed = (
         byte_px.groupBy(*key_cols)
@@ -1071,7 +1070,7 @@ def build_analytics_pipeline(
     src_dx: float | None = None,
     src_nx: int | None = None,
     seed: int = 42,
-    checkpoint: bool | str = True,
+    checkpoint: bool = True,
 ):
     """The §3.3 analytics path as ONE composed lazy program (reference
     ``AggregatedDatasetScenesAuxFieldWithEmbeddings``,
@@ -1185,18 +1184,12 @@ def build_analytics_pipeline(
     # netCDF product — one row per (tile, emb, aux), bounded by the tile
     # count, far below the raster it derives from. ``checkpoint=False``
     # keeps the full upstream plan visible (plan-quality gates inspect
-    # the raster joins, which a checkpoint node hides);
-    # ``checkpoint="durable"`` swaps executor-local blocks (not
-    # fault-tolerant — an executor loss mid-query kills the job on a real
-    # cluster) for a reliable checkpoint in the session's checkpoint dir.
+    # the raster joins, which a checkpoint node hides). Where the
+    # checkpoint lives is the deployment's choice (``operators/persist.py``).
     if checkpoint:
         from .operators.persist import materialize_for_reuse
 
-        # checkpoint=True defers to the env flag (durable=None); only the
-        # explicit string forces the reliable path from code
-        joined = materialize_for_reuse(
-            joined, durable=True if checkpoint == "durable" else None
-        )
+        joined = materialize_for_reuse(joined)
     # X4: PCA over the embedding matrix (fit inside the same program)
     pca_in = joined.select("_uid", F.col("emb_out").alias("embedding"))
     _pca_out, model = pca_transform(pca_in, k=pca_k, id_col="_uid", out_col="pca")
@@ -1510,9 +1503,9 @@ def build_curation_pipeline(
     program value-replays in ANSI SQL.
 
     Materialization discipline: the train corpus materializes ONCE
-    (``materialize_for_reuse`` — executor blocks locally, set
-    ``SPARK_GRAFT_DURABLE_CHECKPOINT=1`` for a reliable checkpoint on a
-    real cluster) and every stage's survivor set materializes as an
+    (``materialize_for_reuse`` — executor blocks locally, a reliable
+    checkpoint on a real cluster when ``operators/persist.py``'s env
+    flag is set) and every stage's survivor set materializes as an
     ID-ONLY relation; each stage is then ``train ⋉ ids``. Without this,
     each of the ~7 stage boundaries re-plans the whole upstream chain
     per consumer — measured 35 parquet scans of the corpus in the final

@@ -1106,33 +1106,68 @@ def test_dbscan_planted_clusters(spark):
     assert out[30] == (None, False)  # noise
 
 
-def test_durable_materialization_matches_local_and_guards_missing_dir(spark):
-    """materialize_for_reuse(durable=True) writes a RELIABLE checkpoint
-    (survives executor loss on a real cluster) and returns the same rows
-    as the default executor-local path; without a configured checkpoint
-    dir it raises with instructions instead of failing mid-job."""
-    import tempfile
+@pytest.fixture(scope="session")
+def checkpoint_dir(tmp_path_factory):
+    """One reliable-checkpoint dir for the whole session: Spark cannot
+    unset ``setCheckpointDir``, so the dir must outlive every later test."""
+    return tmp_path_factory.mktemp("spark-checkpoints")
 
-    import pytest
 
+def _assert_durable_matches_local(spark, monkeypatch, checkpoint_dir, run):
+    """Run ``run()`` without and then with SPARK_GRAFT_DURABLE_CHECKPOINT=1:
+    equal rows, and the durable run wrote new ``rdd-*`` checkpoint files.
+    While the session has no checkpoint dir yet, the flag must raise with
+    instructions instead of failing mid-job."""
+    from convml_data_spark.operators.persist import ENV_FLAG, materialize_for_reuse
+
+    monkeypatch.delenv(ENV_FLAG, raising=False)
+    local = sorted(map(tuple, run().collect()))
+
+    monkeypatch.setenv(ENV_FLAG, "1")
+    sc = spark.sparkContext
+    if sc._jsc.sc().getCheckpointDir().isEmpty():
+        with pytest.raises(ValueError, match="setCheckpointDir"):
+            materialize_for_reuse(spark.range(1))
+    sc.setCheckpointDir(str(checkpoint_dir))
+    before = set(checkpoint_dir.rglob("rdd-*"))
+    assert sorted(map(tuple, run().collect())) == local
+    assert set(checkpoint_dir.rglob("rdd-*")) - before
+
+
+def test_durable_materialization_matches_local_and_guards_missing_dir(
+    spark, monkeypatch, checkpoint_dir
+):
+    """With SPARK_GRAFT_DURABLE_CHECKPOINT=1 every materialize_for_reuse
+    barrier of dbscan_labels writes a RELIABLE checkpoint (survives
+    executor loss on a real cluster) and returns the same rows as the
+    default executor-local path; without a configured checkpoint dir it
+    raises with instructions instead of failing mid-job."""
     from convml_data_spark.operators.clustering import dbscan_labels
-    from convml_data_spark.operators.persist import materialize_for_reuse
 
     rows = [(k, 0.01 * k, 0.0) for k in range(5)] + [(30, 100.0, -50.0)]
     pts = spark.createDataFrame(rows, "id long, x double, y double")
-    local = sorted(map(tuple, dbscan_labels(pts, eps=0.08, min_pts=4).collect()))
+    _assert_durable_matches_local(
+        spark,
+        monkeypatch,
+        checkpoint_dir,
+        lambda: dbscan_labels(pts, eps=0.08, min_pts=4),
+    )
 
-    sc = spark.sparkContext
-    had_dir = not sc._jsc.sc().getCheckpointDir().isEmpty()
-    if not had_dir:
-        with pytest.raises(ValueError, match="setCheckpointDir"):
-            materialize_for_reuse(pts, durable=True)
-    with tempfile.TemporaryDirectory() as tmp:
-        sc.setCheckpointDir(tmp)
-        durable = sorted(
-            map(tuple, dbscan_labels(pts, eps=0.08, min_pts=4, durable=True).collect())
-        )
-        assert durable == local
+
+def test_durable_materialization_reaches_nested_eager_checkpoint(
+    spark, monkeypatch, checkpoint_dir
+):
+    """The env switch also reaches a barrier nested one operator down:
+    canonical_survivors runs connected_components' eager pair checkpoint,
+    which then writes a reliable checkpoint with unchanged survivors."""
+    ids = spark.createDataFrame([(k,) for k in range(10)], "id long")
+    pairs = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "id_a long, id_b long")
+    _assert_durable_matches_local(
+        spark,
+        monkeypatch,
+        checkpoint_dir,
+        lambda: dedup.canonical_survivors(ids, pairs),
+    )
 
 
 def test_dbscan_invariants_random_points(spark):
